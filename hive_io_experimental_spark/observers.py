@@ -25,6 +25,7 @@ idiom for this job.
 
 from __future__ import annotations
 
+import itertools
 import time
 from dataclasses import dataclass
 
@@ -166,9 +167,7 @@ class WriteMeter(ScanMeter):
     # itertools.count is a single C-level atomic step, so meters created
     # from concurrent writer threads can never collide on a name (a
     # plain `_seq += 1` races under threaded writes)
-    import itertools as _itertools
-
-    _seq = _itertools.count(1)
+    _seq = itertools.count(1)
 
     def __init__(self, name: str | None = None) -> None:
         # Observation instances are single-use; uniquify the default name

@@ -157,7 +157,7 @@ def value_decile_histogram(
     bucket assignment is then a pure map (count values > boundary) and the
     histogram is a tiny second aggregate. Rows equal to a boundary fall in
     the lower bucket. Returns (decile, n_rows, min_value, max_value,
-    sum_value).
+    sum_value), ordered by decile (an n_buckets-row sort).
     """
     v = F.col(value_col)
     fracs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
@@ -180,6 +180,7 @@ def value_decile_histogram(
             .cast("double")
             .alias("sum_value"),
         )
+        .orderBy("decile")
     )
 
 

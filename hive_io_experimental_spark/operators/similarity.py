@@ -97,13 +97,14 @@ def cosine_topk(
 # Reference discipline: strict precondition checks before work
 # (output/HiveApiOutputFormat.java:240-262).
 _MAX_BROADCAST_QUERIES = 65_536
+_NO_BROADCAST_ESCAPE = "cosine_topk_bucketed or quantized_cosine_topk_bucketed"
 
 
 def _require_small_query_side(
     q: DataFrame,
     caller: str,
     cap: int | None = None,
-    escape: str = "cosine_topk_bucketed or quantized_cosine_topk_bucketed",
+    escape: str = _NO_BROADCAST_ESCAPE,
 ) -> None:
     """Enforce the queries-<<-corpus contract before broadcasting.
 
@@ -125,12 +126,16 @@ def _require_small_query_side(
     limit = _MAX_BROADCAST_QUERIES if cap is None else max(1, cap)
     n_q = q.limit(limit + 1).count()
     if n_q > limit:
-        raise ValueError(
-            f"{caller} broadcasts the query side to every task; got > "
-            f"{limit} query vectors. Use {escape} "
-            f"(LSH candidate generation, no broadcast) for large query "
-            f"sets."
-        )
+        raise _too_many_queries(caller, limit, escape)
+
+
+def _too_many_queries(caller: str, limit: int, escape: str) -> ValueError:
+    return ValueError(
+        f"{caller} broadcasts the query side to every task; got > "
+        f"{limit} query vectors. Use {escape} "
+        f"(LSH candidate generation, no broadcast) for large query "
+        f"sets."
+    )
 
 
 def _cosine_topk_pandas(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
@@ -735,6 +740,20 @@ def ivf_index_consistency_check(
     )
 
 
+def _centroid_matrix(cent_rows: list) -> tuple:
+    """(cids, C, c_norms) over the cid-sorted centroid rows: the geometry
+    every cosine assignment closes over. A zero-norm centroid gets an
+    infinite norm, so it never wins."""
+    import numpy as np
+
+    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
+    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
+    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
+    c_norms = np.linalg.norm(C, axis=1)
+    c_norms[c_norms == 0] = np.inf
+    return cids, C, c_norms
+
+
 def _assign_pandas(
     side: DataFrame, sid: str, vname: str, nrmname: str,
     cent_rows: list, keep: int,
@@ -752,11 +771,7 @@ def _assign_pandas(
     """
     import numpy as np
 
-    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-    c_norms = np.linalg.norm(C, axis=1)
-    c_norms[c_norms == 0] = np.inf  # zero-norm centroid never wins
+    cids, C, c_norms = _centroid_matrix(cent_rows)
 
     # bound the per-chunk cosine matrix to ~16 MB so a WIDE centroid set
     # (semantic_dedup's stride quantizer grows its cluster count with
@@ -1957,6 +1972,22 @@ def pq_codebooks_trained(
     )
 
 
+def _codebook_matrices(cb_rows: list, num_subspaces: int) -> list:
+    """Per-subspace codeword matrices, rows ordered by code: the encode
+    argmax position and the ADC LUT position of each codeword."""
+    import numpy as np
+
+    return [
+        np.array(
+            [r["cv"] for r in sorted(
+                (r for r in cb_rows if r["j"] == j), key=lambda r: r["code"]
+            )],
+            dtype=np.float64,
+        )
+        for j in range(num_subspaces)
+    ]
+
+
 def _pq_encode_pandas(
     u: DataFrame, cb_rows: list, num_subspaces: int, dsub: int
 ) -> DataFrame:
@@ -1968,14 +1999,8 @@ def _pq_encode_pandas(
     float noise)."""
     import numpy as np
 
-    mats, biases = [], []
-    for j in range(num_subspaces):
-        rows = sorted(
-            (r for r in cb_rows if r["j"] == j), key=lambda r: r["code"]
-        )
-        C = np.array([r["cv"] for r in rows], dtype=np.float64)
-        mats.append(C)
-        biases.append(0.5 * (C * C).sum(axis=1))
+    mats = _codebook_matrices(cb_rows, num_subspaces)
+    biases = [0.5 * (C * C).sum(axis=1) for C in mats]
 
     def encode(batches):
         for pdf in batches:
@@ -2024,19 +2049,9 @@ def _ivf_pq_encode_assign_pandas(
     whole pass into one task)."""
     import numpy as np
 
-    cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-    c_norms = np.linalg.norm(C, axis=1)
-    c_norms[c_norms == 0] = np.inf  # zero-norm centroid never wins
-    mats, biases = [], []
-    for j in range(num_subspaces):
-        rows = sorted(
-            (r for r in cb_rows if r["j"] == j), key=lambda r: r["code"]
-        )
-        Cb = np.array([r["cv"] for r in rows], dtype=np.float64)
-        mats.append(Cb)
-        biases.append(0.5 * (Cb * Cb).sum(axis=1))
+    cids, C, c_norms = _centroid_matrix(cent_rows)
+    mats = _codebook_matrices(cb_rows, num_subspaces)
+    biases = [0.5 * (Cb * Cb).sum(axis=1) for Cb in mats]
     chunk_rows = max(1, 2_000_000 // max(len(cids), 1))
 
     def run(batches):
@@ -3110,12 +3125,14 @@ def ivf_pq_query_index(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ top-k served ENTIRELY from a persisted index: queries are
-    assigned to their ``nprobe`` nearest stored centroids (few-KB
-    centroid table, Arrow/BLAS map-side), then scored by ADC against
-    only the probed lists' stored codes. The corpus-side scan reads the
-    lists table (one long per vector) and the codes table (m longs) —
-    never the raw embeddings. Same small-query broadcast contract as
-    ivf_pq_topk.
+    assigned to their ``nprobe`` nearest stored centroids and their ADC
+    lookup tables are built on the driver (the query side is small by
+    contract, and the few-KB centroid and codebook tables are collected
+    anyway), then scored against only the probed lists' stored codes.
+    The corpus-side scan reads the lists table (one long per vector) and
+    the codes table (m longs) — never the raw embeddings. Same
+    small-query broadcast contract as ivf_pq_topk; each query id must be
+    unique.
 
     Serving preconditions (raise, never silently-wrong scores): the four
     tables' ``build_id`` stamps must agree (a torn rebuild is refused —
@@ -3123,46 +3140,49 @@ def ivf_pq_query_index(
     match the stored codebooks' subspace count (a mismatch would index
     past the stored codes/LUT arrays and, with ANSI off, surface as
     silent NULL scores)."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
-    _require_small_query_side(
-        queries.select(F.col(id_col)),
-        "ivf_pq_query_index (broadcast probes + LUTs)",
-    )
     from hive_io_experimental_spark.functions.reuse import run_concurrently
+    from hive_io_experimental_spark.input import HiveInput, ScanSpec
 
     inp = HiveInput(spark, catalog)
     # torn-rebuild fence: every table must carry the SAME build stamp.
     # The two KB-sized geometry tables are collected ONCE each — their
-    # rows answer the stamp fence, the geometry probe AND the Arrow/LUT
-    # closures (previously: four stamp probe jobs plus a centroid
-    # collect plus a codebook geometry job — r14 optimization round,
-    # guide §1.2); the corpus-sized lists/codes tables keep their
-    # one-sampled-row stamp probes (no full scan). All four probe jobs
-    # are independent reads of different tables — overlapped (§2.6).
+    # rows answer the stamp fence, the geometry check AND the driver-side
+    # query math; the corpus-sized lists/codes tables keep their
+    # one-sampled-row stamp probes (no full scan). The bounded query
+    # collect (the small-query guard) and the four probes are
+    # independent reads — overlapped, the guard first in call order so
+    # its error still wins.
     lists = inp.read_table(ScanSpec(table=f"{index_table}_lists"))
     codes = inp.read_table(ScanSpec(table=index_table))
-    (cents_rows, cent_stamp), (cb_rows, cb_stamp), l_stamp, c_stamp = (
-        run_concurrently(
-            lambda: _collect_stamped(
-                "ivf_pq_query_index", index_table, "centroids",
-                inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _collect_stamped(
-                "ivf_pq_query_index", index_table, "codebooks",
-                inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_query_index", index_table, "lists", lists,
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_query_index", index_table, "codes", codes,
-                rebuild="ivf_pq_build_index",
-            ),
-        )
+    (
+        (qid_type, q_rows),
+        (cent_rows, cent_stamp),
+        (cb_rows, cb_stamp),
+        l_stamp,
+        c_stamp,
+    ) = run_concurrently(
+        lambda: _collect_ivf_pq_queries(
+            queries, "ivf_pq_query_index (broadcast probes + LUTs)",
+            vec_col, id_col,
+        ),
+        lambda: _collect_stamped(
+            "ivf_pq_query_index", index_table, "centroids",
+            inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _collect_stamped(
+            "ivf_pq_query_index", index_table, "codebooks",
+            inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _index_stamp(
+            "ivf_pq_query_index", index_table, "lists", lists,
+            rebuild="ivf_pq_build_index",
+        ),
+        lambda: _index_stamp(
+            "ivf_pq_query_index", index_table, "codes", codes,
+            rebuild="ivf_pq_build_index",
+        ),
     )
     stamps = {"centroids": cent_stamp, "codebooks": cb_stamp,
               "lists": l_stamp, "codes": c_stamp}
@@ -3172,61 +3192,77 @@ def ivf_pq_query_index(
             f"stamps across its tables ({stamps}) — a rebuild was torn "
             f"mid-way. Re-run ivf_pq_build_index before serving."
         )
-    lists = lists.select("cid", "id")
-    codes = codes.select("id", "codes")
-    cent_rows = [{"cid": r["cid"], "cv": r["cv"]} for r in cents_rows]
-    if cb_rows[0]["cv"] is None:
+    _check_ivf_pq_codebooks(
+        "ivf_pq_query_index", index_table, cb_rows, num_subspaces
+    )
+    return _ivf_pq_adc_rank(
+        lists.select("cid", "id"), codes.select("id", "codes"),
+        qid_type, q_rows, cent_rows, cb_rows, k, nprobe, num_subspaces,
+        op="ivf_pq_query_index",
+    )
+
+
+def _check_ivf_pq_codebooks(
+    op: str, index_table: str, cb_rows: list, num_subspaces: int
+) -> None:
+    """Serving geometry check on the collected codebook rows: a non-empty
+    table whose subspace count matches ``num_subspaces``."""
+    if not cb_rows or cb_rows[0]["cv"] is None:
         raise ValueError(
-            f"ivf_pq_query_index: empty codebook table "
-            f"{index_table}_codebooks"
+            f"{op}: empty codebook table {index_table}_codebooks"
         )
     m = int(max(r["j"] for r in cb_rows) + 1)
     if m != num_subspaces:
         raise ValueError(
-            f"ivf_pq_query_index: num_subspaces={num_subspaces} does not "
-            f"match the stored index ({index_table}_codebooks holds "
-            f"{m} subspaces). Pass num_subspaces={m} — "
-            f"a mismatch would misindex the stored codes."
+            f"{op}: num_subspaces={num_subspaces} does not match the "
+            f"stored index ({index_table}_codebooks holds {m} "
+            f"subspaces). Pass num_subspaces={m} — a mismatch would "
+            f"misindex the stored codes."
         )
-    dsub = len(cb_rows[0]["cv"])
-    codebooks = _local_codebooks(spark, cb_rows)
-    return _ivf_pq_adc_rank(
-        lists, codes, queries, cent_rows, codebooks, k, nprobe,
-        num_subspaces, dsub, vec_col, id_col,
+
+
+def _collect_ivf_pq_queries(
+    queries: DataFrame, caller: str, vec_col: str, id_col: str
+) -> tuple:
+    """(query_id type, [(query_id, qv)]) of a served query side. The
+    collect is bounded at cap+1 rows, so it is also the small-query
+    guard, with _require_small_query_side's error."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
     )
+    rows = q.limit(_MAX_BROADCAST_QUERIES + 1).collect()
+    if len(rows) > _MAX_BROADCAST_QUERIES:
+        raise _too_many_queries(
+            caller, _MAX_BROADCAST_QUERIES, _NO_BROADCAST_ESCAPE
+        )
+    return q.schema["query_id"].dataType, rows
 
 
 def _ivf_pq_adc_rank(
     lists: DataFrame,
     codes: DataFrame,
-    queries: DataFrame,
+    qid_type,
+    q_rows: list,
     cent_rows: list,
-    codebooks: DataFrame,
+    cb_rows: list,
     k: int,
     nprobe: int,
     num_subspaces: int,
-    dsub: int,
-    vec_col: str,
-    id_col: str,
+    op: str,
 ) -> DataFrame:
-    """The IVF-PQ serving plan proper — nprobe centroid assignment
-    (Arrow map-side over the collected few-KB centroid rows), per-query
-    ADC LUTs, probed-lists-only scoring, exact rank. Shared by
-    ivf_pq_query_index and the streaming twin's foreachBatch
-    (streaming/similarity.py), so stream output is batch output by
-    construction."""
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
-    ).withColumn("_qnrm", l2_norm(F.col("_qv")))
-    probes = _assign_pandas(
-        qv, "query_id", "_qv", "_qnrm", cent_rows, keep=nprobe
-    ).select("cid", "query_id")
-    qu = _unit_vectors(queries, vec_col, id_col)
-    luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
+    """The IVF-PQ serving plan proper: the driver-side query side
+    (_ivf_pq_probe_luts over the collected query rows and the
+    collected centroid/codebook rows) broadcast onto the probed lists'
+    codes, then the exact rank. Shared by ivf_pq_query_index and the
+    streaming twin's foreachBatch (streaming/similarity.py), so stream
+    output is batch output by construction."""
+    prb = _ivf_pq_probe_luts(
+        lists.sparkSession, op, qid_type, q_rows, cent_rows, cb_rows,
+        nprobe, num_subspaces,
+    )
     inv = lists.withColumnRenamed("id", "neighbor_id").join(
         codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
     )
-    prb = probes.join(luts, "query_id")
     scored = (
         inv.join(F.broadcast(prb), "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -3241,6 +3277,110 @@ def _ivf_pq_adc_rank(
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
+
+
+def _ivf_pq_probe_luts(
+    spark,
+    op: str,
+    qid_type,
+    q_rows: list,
+    cent_rows: list,
+    cb_rows: list,
+    nprobe: int,
+    num_subspaces: int,
+) -> DataFrame:
+    """(cid, query_id, _lut) for every query and each of its ``nprobe``
+    nearest centroids, computed on the driver and returned as a local
+    Arrow relation — no Python-worker stage and no shuffle for a side
+    that holds at most _MAX_BROADCAST_QUERIES rows.
+
+    The rows equal the relational query side ivf_pq_topk builds
+    (_assign_pandas probes joined with _pq_query_luts), which
+    ivf_pq_index_consistency_check anti-joins the served rows against:
+
+    - norms and LUT dots are sequential folds over the dimension axis,
+      the IEEE order l2_norm/dot_product compile to, so every double is
+      bit-identical;
+    - LUT rows are ordered by code per subspace, as _pq_query_luts'
+      sort_array(collect_list(...)) orders them;
+    - assignment is _assign_pandas' math: the same matmul over
+      cid-sorted centroids and a stable argsort (ties to the lowest
+      cid);
+    - NULL and zero-norm queries are dropped, as _unit_vectors drops
+      them.
+
+    Duplicate query ids raise: the rows are keyed by query id, so the
+    copies could not be told apart downstream (the relational LUT
+    grouping merges them into one double-length table)."""
+    from collections import Counter
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    ids = Counter(r[0] for r in q_rows if r[0] is not None)
+    dups = sorted(i for i, n in ids.items() if n > 1)
+    if dups:
+        raise ValueError(
+            f"{op}: duplicate query ids {dups[:5]} — each query's ADC "
+            f"lookup table is keyed by its id, so copies would be "
+            f"scored as one merged query. Send each query id once."
+        )
+    cids, C, c_norms = _centroid_matrix(cent_rows)
+    mats = _codebook_matrices(cb_rows, num_subspaces)
+    dim, dsub = C.shape[1], mats[0].shape[1]
+    rows = [
+        r for r in q_rows
+        if r[0] is not None and r[1] is not None and None not in r[1]
+    ]
+    for r in rows:
+        if len(r[1]) != dim:
+            raise ValueError(
+                f"{op}: query {r[0]} has {len(r[1])} dimensions; the "
+                f"index holds {dim}-dimensional vectors"
+            )
+    V = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, dim)
+    sq = np.zeros(len(V))
+    for x in V.T:
+        sq = sq + x * x
+    nrm = np.sqrt(sq)
+    keep = nrm > 0  # NaN norms fail it too, like _unit_vectors' filter
+    V, nrm = V[keep], nrm[keep]
+    qids = [r[0] for r, kept in zip(rows, keep) if kept]
+
+    cos = (V @ C.T) / (nrm[:, None] * c_norms[None, :])
+    order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
+    U = V / nrm[:, None]
+    luts = []
+    for j, Cb in enumerate(mats):
+        lut = np.zeros((len(U), len(Cb)))
+        for t in range(dsub):
+            lut = lut + U[:, j * dsub + t, None] * Cb[None, :, t]
+        luts.append(lut)
+
+    # one output row per (query, probed centroid), each carrying the
+    # query's m x ksub table as array<array<double>>
+    sel = np.repeat(np.arange(len(qids)), order.shape[1])
+    sizes = np.tile([len(Cb) for Cb in mats], len(sel))
+    inner = pa.ListArray.from_arrays(
+        pa.array(np.concatenate([[0], np.cumsum(sizes)]), pa.int32()),
+        pa.array(np.concatenate(luts, axis=1)[sel].ravel()),
+    )
+    table = pa.table({
+        "cid": pa.array(cids[order.ravel()]),
+        "query_id": pa.array([qids[i] for i in sel]),
+        "_lut": pa.ListArray.from_arrays(
+            pa.array(
+                np.arange(0, len(sizes) + 1, num_subspaces), pa.int32()
+            ),
+            inner,
+        ),
+    })
+    return spark.createDataFrame(table, T.StructType([
+        T.StructField("cid", T.LongType()),
+        T.StructField("query_id", qid_type),
+        T.StructField("_lut", T.ArrayType(T.ArrayType(T.DoubleType()))),
+    ]))
 
 
 def ivf_pq_index_consistency_check(

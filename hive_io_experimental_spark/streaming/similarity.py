@@ -482,12 +482,13 @@ def serve_ivf_pq_topk_stream(
     """Streaming IVF-PQ top-k from the persisted four-table index —
     serve_pq_topk_stream with the coarse quantizer in front: each
     micro-batch's queries are assigned to their nprobe nearest stored
-    centroids (Arrow map-side over the few-KB centroid rows collected
-    once at plan time) and ADC-scored against only the probed lists'
-    pinned codes. Output rows are (query_id, neighbor_id, adc_score,
-    rank), row-identical to ivf_pq_query_index over the same closed
-    input — the rank runs inside foreachBatch through the SAME
-    _ivf_pq_adc_rank plan the batch path serves with.
+    centroids and get their ADC lookup tables on the driver (from the
+    few-KB centroid and codebook rows collected once at plan time), then
+    are ADC-scored against only the probed lists' pinned codes. Output
+    rows are (query_id, neighbor_id, adc_score, rank), row-identical to
+    ivf_pq_query_index over the same closed input — the rank runs inside
+    foreachBatch through the SAME _ivf_pq_adc_rank plan the batch path
+    serves with. Query ids must be unique within a micro-batch.
 
     Lifecycle semantics are serve_pq_topk_stream's, over four tables:
     plan-time torn-rebuild refusal, per-batch pre+post stamp probes
@@ -499,8 +500,9 @@ def serve_ivf_pq_topk_stream(
     rebuild)."""
     from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.operators.similarity import (
+        _check_ivf_pq_codebooks,
+        _collect_ivf_pq_queries,
         _ivf_pq_adc_rank,
-        _require_small_query_side,
     )
 
     parts = (
@@ -516,51 +518,37 @@ def serve_ivf_pq_topk_stream(
 
     planned_build = _validate()
     inp = HiveInput(spark, catalog)
-    cents = inp.read_table(
-        ScanSpec(table=f"{index_table}_centroids")
-    ).select("cid", "cv")
-    codebooks = inp.read_table(
-        ScanSpec(table=f"{index_table}_codebooks")
-    ).select("j", "code", "cv")
     lists = inp.read_table(ScanSpec(table=f"{index_table}_lists")).select(
         "cid", "id"
     )
     codes = inp.read_table(ScanSpec(table=index_table)).select(
         "id", "codes"
     )
-    cent_rows = [r.asDict() for r in cents.collect()]  # nlist-bounded
+    # both geometry tables are nlist/ksub-bounded: collected once
+    cent_rows = inp.read_table(
+        ScanSpec(table=f"{index_table}_centroids")
+    ).select("cid", "cv").collect()
+    cb_rows = inp.read_table(
+        ScanSpec(table=f"{index_table}_codebooks")
+    ).select("j", "code", "cv").collect()
     if not cent_rows:
         raise ValueError(
             f"serve_ivf_pq_topk_stream: empty centroid table "
             f"{index_table}_centroids"
         )
-    probe = codebooks.agg(
-        F.first(F.size("cv")).alias("d"),
-        (F.max("j") + 1).alias("m"),
-    ).first()
-    if probe is None or probe["d"] is None:
-        raise ValueError(
-            f"serve_ivf_pq_topk_stream: empty codebook table "
-            f"{index_table}_codebooks"
-        )
-    if probe["m"] != num_subspaces:
-        raise ValueError(
-            f"serve_ivf_pq_topk_stream: num_subspaces={num_subspaces} "
-            f"does not match the stored index ({index_table}_codebooks "
-            f"holds {probe['m']} subspaces). Pass "
-            f"num_subspaces={probe['m']} — a mismatch would misindex "
-            f"the stored codes."
-        )
-    dsub = probe["d"]
+    _check_ivf_pq_codebooks(
+        "serve_ivf_pq_topk_stream", index_table, cb_rows, num_subspaces
+    )
 
     def _rank(batch_df: DataFrame) -> DataFrame:
-        _require_small_query_side(
-            batch_df.select(F.col(id_col)),
+        qid_type, q_rows = _collect_ivf_pq_queries(
+            batch_df,
             "serve_ivf_pq_topk_stream (per-micro-batch probes + LUTs)",
+            vec_col, id_col,
         )
         return _ivf_pq_adc_rank(
-            lists, codes, batch_df, cent_rows, codebooks, k, nprobe,
-            num_subspaces, dsub, vec_col, id_col,
+            lists, codes, qid_type, q_rows, cent_rows, cb_rows, k,
+            nprobe, num_subspaces, op="serve_ivf_pq_topk_stream",
         )
 
     return _serve_adc_stream(

@@ -2909,6 +2909,91 @@ def test_ivf_pq_query_index_refuses_torn_rebuild(spark, sf_dir, warehouse):
         )
 
 
+@pytest.fixture(scope="module")
+def ivfpq_served(spark, sf_dir):
+    """One persisted IVF-PQ index shared by the served-query-side tests."""
+    import shutil
+    import tempfile
+
+    from hive_io_experimental_spark.catalog import Catalog
+
+    wh = tempfile.mkdtemp(prefix="hio_wh_")
+    cat = Catalog(wh)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    similarity.ivf_pq_build_index(spark, cat, "default.emb_ivfpq_q", emb)
+    yield cat, emb
+    shutil.rmtree(wh, ignore_errors=True)
+
+
+def _serve_ivfpq(spark, cat, queries, **kw):
+    return sorted(
+        tuple(r) for r in similarity.ivf_pq_query_index(
+            spark, cat, "default.emb_ivfpq_q", queries, **kw
+        ).collect()
+    )
+
+
+def test_ivf_pq_served_rows_equal_direct_rows(spark, ivfpq_served):
+    """The served query side (probes and ADC tables computed on the
+    driver) returns exactly ivf_pq_topk's rows, adc_score doubles
+    included."""
+    cat, emb = ivfpq_served
+    queries = emb.filter(F.col("vec_id") < 40)
+    cols = ["query_id", "neighbor_id", "adc_score", "rank"]
+    for k, nprobe in ((5, 2), (20, 6)):
+        served = _serve_ivfpq(spark, cat, queries, k=k, nprobe=nprobe)
+        direct = sorted(
+            tuple(r) for r in similarity.ivf_pq_topk(
+                emb, queries, k=k, nprobe=nprobe
+            ).select(cols).collect()
+        )
+        assert served == direct
+        assert {r[0] for r in served} == set(range(40))
+
+
+def test_ivf_pq_served_zero_norm_query_returns_no_rows(spark, ivfpq_served):
+    cat, emb = ivfpq_served
+    queries = emb.filter(F.col("vec_id") < 10)
+    zero = emb.filter(F.col("vec_id") == 0).select(
+        F.lit(10**6).cast("long").alias("vec_id"),
+        F.transform("embedding", lambda x: x * 0).alias("embedding"),
+        "label",
+    )
+    with_zero = _serve_ivfpq(spark, cat, queries.unionByName(zero), k=5)
+    assert with_zero == _serve_ivfpq(spark, cat, queries, k=5)
+    assert len(with_zero) == 50
+
+
+def test_ivf_pq_served_query_cap_still_raises(
+    spark, ivfpq_served, monkeypatch
+):
+    cat, emb = ivfpq_served
+    monkeypatch.setattr(similarity, "_MAX_BROADCAST_QUERIES", 3)
+    with pytest.raises(
+        ValueError,
+        match=r"ivf_pq_query_index \(broadcast probes \+ LUTs\) "
+        r"broadcasts the query side to every task; got > 3 query vectors",
+    ):
+        _serve_ivfpq(spark, cat, emb.filter(F.col("vec_id") < 4))
+    assert len(_serve_ivfpq(spark, cat, emb.filter(F.col("vec_id") < 3),
+                            k=2)) == 6
+
+
+def test_ivf_pq_served_refuses_duplicate_query_ids(spark, ivfpq_served):
+    """A query id sent twice used to merge both copies into one
+    double-length LUT and score it silently wrong; it now raises."""
+    cat, emb = ivfpq_served
+    queries = emb.filter(F.col("vec_id") < 3)
+    with pytest.raises(
+        ValueError,
+        match=r"ivf_pq_query_index: duplicate query ids \[0\] — each "
+        r"query's ADC lookup table is keyed by its id",
+    ):
+        _serve_ivfpq(spark, cat, queries.unionByName(
+            queries.filter(F.col("vec_id") == 0)
+        ))
+
+
 def test_ivf_pq_index_consistency_with_trained_codebooks(
     spark, sf_dir, warehouse
 ):

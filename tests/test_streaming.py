@@ -1281,6 +1281,41 @@ def test_ivf_pq_topk_stream_matches_batch_and_append_isolation(
     assert set(got2) == batch
 
 
+def test_ivf_pq_topk_stream_refuses_duplicate_query_ids(
+    spark, sf_dir, tmp_path
+):
+    """A micro-batch carrying one query id twice stops the stream with the
+    batch path's duplicate-id error, never merged (wrong) scores."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from hive_io_experimental_spark.catalog import Catalog
+    from hive_io_experimental_spark.operators import similarity
+    from hive_io_experimental_spark.streaming.similarity import (
+        serve_ivf_pq_topk_stream,
+    )
+
+    cat = Catalog(str(tmp_path / "wh"))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    similarity.ivf_pq_build_index(spark, cat, "default.emb_ivfpq_d", emb)
+    queries = emb.filter(F.col("vec_id") < 4)
+    src = str(tmp_path / "qsrc")
+    queries.unionByName(queries.filter(F.col("vec_id") == 2)).coalesce(
+        1
+    ).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(queries.schema).parquet(src)
+    q = serve_ivf_pq_topk_stream(
+        spark, cat, "default.emb_ivfpq_d", stream,
+        sink_fn=lambda df, epoch: df.count(), k=3,
+    ).trigger(availableNow=True).option(
+        "checkpointLocation", str(tmp_path / "ckpt")
+    ).start()
+    with pytest.raises(
+        StreamingQueryException,
+        match=r"serve_ivf_pq_topk_stream: duplicate query ids \[2\]",
+    ):
+        q.awaitTermination(300)
+
+
 def test_pq_topk_stream_detects_midstream_and_midbatch_rebuild(
     spark, sf_dir, tmp_path
 ):

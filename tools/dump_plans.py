@@ -1,8 +1,9 @@
 """Dump .explain('formatted') for named gates to plans/<round>/ files.
 
 Usage: python tools/dump_plans.py <suffix: before|after> <gate> [gate ...]
-Writes plans/r14/<gate>_<suffix>.txt. The judge reads these against the
-claims in OPTIMIZATION_r14.md.
+Writes plans/<round>/<gate>_<suffix>.txt, where <round> is
+$SPARK_GRAFT_PLANS_ROUND (default r15). Run it on the tree before and
+after a change to pair the plans with a speed claim.
 """
 
 from __future__ import annotations
