@@ -18,6 +18,7 @@ against a schema containing only the partition columns.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -311,6 +312,11 @@ class HiveInput:
                 raise SnapshotError(
                     f"as_of_version given but table {table} is not versioned"
                 )
+            if not os.path.exists(location):
+                # created but never written (e.g. a rewrite that crashed
+                # between create and write): empty, like an empty manifest
+                df = self.spark.createDataFrame([], schema.to_struct_type())
+                return df, schema.partition_keys
             if schema.partition_keys:
                 # Hive-style key=value dirs; keep partition values as strings
                 # (reference invariant, HiveReadableRecord.java:140-146).

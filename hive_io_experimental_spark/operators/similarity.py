@@ -26,9 +26,19 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_io_experimental_spark.functions.partitioning import spread
+from hive_io_experimental_spark.functions.reuse import reuse, run_concurrently
 from hive_io_experimental_spark.functions.vectors import dot_product, l2_norm
+from hive_io_experimental_spark.operators.artifacts import (
+    ArtifactSet,
+    Part,
+    append_fresh,
+    mismatch_count,
+    read_set,
+    write_set,
+)
 
 
 def _as_double(vec_col: str):
@@ -2564,6 +2574,30 @@ def pq_recall_check(
     )
 
 
+_CODEBOOK_COLS = (
+    ("j", T.IntegerType()),
+    ("code", T.IntegerType()),
+    ("cv", T.ArrayType(T.DoubleType())),
+)
+# the persisted index sets (operators/artifacts.py): geometry tables are
+# KB-sized and collected once per read; corpus-sized tables are versioned
+# (appends land as snapshots) and get one sampled stamp per read
+_LSH_INDEX = ArtifactSet("index", "lsh_build_index", (
+    Part("meta", "_meta", "meta"),
+    Part("buckets", "", "stamp", versioned=True),
+))
+_PQ_INDEX = ArtifactSet("index", "pq_build_index", (
+    Part("codebooks", "_codebooks", "rows"),
+    Part("codes", "", "stamp", versioned=True),
+))
+_IVF_PQ_INDEX = ArtifactSet("index", "ivf_pq_build_index", (
+    Part("centroids", "_centroids", "rows"),
+    Part("codebooks", "_codebooks", "rows"),
+    Part("lists", "_lists", "stamp", versioned=True),
+    Part("codes", "", "stamp", versioned=True),
+))
+
+
 def pq_build_index(
     spark,
     catalog,
@@ -2586,89 +2620,34 @@ def pq_build_index(
     recreate under the catalog's strict write preconditions (reference
     OutputConf parity — never a silent in-place overwrite). Pass a
     trained codebook frame (pq_codebooks_trained) for the quality tier;
-    default is the sampled SQL-checkable tier."""
-    from pyspark.sql import types as T
+    default is the sampled SQL-checkable tier.
 
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-    from hive_io_experimental_spark.schema import HiveTableSchema
-
+    The codes table is VERSIONED (pq_append_to_index folds new vectors
+    in as snapshot appends); the codebooks are the immutable geometry.
+    Both carry one shared build_id (operators/artifacts.py), so a crash
+    between the two rewrites is refused by every read path instead of
+    serving new codebooks over old codes."""
     if codebooks is None:
         codebooks = pq_codebooks_sampled(
             corpus, num_subspaces, centroid_stride, max_codes,
             vec_col, id_col,
         )
-    # collect the (KB-sized by design) codebooks ONCE and serve both
-    # consumers — the encoder's closure and the codebook-table write —
-    # from the local rows; previously the codebook plan (sample +
-    # explode + window shuffle) ran twice per build (r14 optimization
-    # round, guide §1.2). Doubles round-trip py4j exactly (IEEE 64-bit
-    # both sides), so the written rows are bit-identical.
-    from pyspark.sql import types as _T
-
-    cb_schema = _T.StructType([
-        _T.StructField("j", _T.IntegerType()),
-        _T.StructField("code", _T.IntegerType()),
-        _T.StructField("cv", _T.ArrayType(_T.DoubleType())),
-    ])
-    cb_local = spark.createDataFrame(
-        [(r["j"], r["code"], r["cv"]) for r in codebooks.collect()],
-        cb_schema,
-    )
-    codebooks = cb_local
+    # collect the KB-sized codebooks once: the rows feed both the
+    # encoder's closure and the codebook-table write (doubles round-trip
+    # py4j exactly, so the written rows are bit-identical)
+    codebooks = _local_codebooks(spark, codebooks.collect())
     codes = pq_encode(
         corpus, codebooks, num_subspaces, centroid_stride, max_codes,
         vec_col, id_col,
     )
-    cb_table = f"{index_table}_codebooks"
-    out = HiveOutput(spark, catalog)
-    # the codes table is VERSIONED: pq_append_to_index folds new vectors
-    # in as snapshot appends (and time-travel reads the index as-of any
-    # tick); the codebooks are the immutable geometry. Both tables carry
-    # one shared build_id: the drop-then-write across two tables is not
-    # atomic, and a crash between them leaves NEW codebooks with
-    # OLD-codebook codes — mixed stamps, which the read paths REFUSE
-    # instead of serving silently-wrong ADC scores (the ivf_pq fence).
-    import uuid
-
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    bid = uuid.uuid4().hex
-    tables = (
-        (
-            cb_table,
-            HiveTableSchema((
-                ("j", T.IntegerType()),
-                ("code", T.IntegerType()),
-                ("cv", T.ArrayType(T.DoubleType())),
-                ("build_id", T.StringType()),
-            )),
-            codebooks,
-            False,
-        ),
-        (
-            index_table,
-            HiveTableSchema((
-                ("id", corpus.schema[id_col].dataType),
-                ("codes", T.ArrayType(T.LongType())),
-                ("build_id", T.StringType()),
-            )),
+    write_set(spark, catalog, _PQ_INDEX, index_table, {
+        "codebooks": (_CODEBOOK_COLS, codebooks),
+        "codes": (
+            (("id", corpus.schema[id_col].dataType),
+             ("codes", T.ArrayType(T.LongType()))),
             codes,
-            True,
         ),
-    )
-    for tbl, schema, _df, versioned in tables:
-        if catalog.table_exists(tbl):
-            catalog.drop_table(tbl, delete_data=True)
-        catalog.create_table(tbl, schema, versioned=versioned)
-    # independent writes (a mid-way crash leaves mixed stamps / an empty
-    # table, both refused by the read paths): the KB-sized codebook
-    # write rides the corpus-encode write's task tail (guide §2.6)
-    run_concurrently(*(
-        (lambda t=tbl, fr=df: out.write_table(
-            WriteSpec(table=t), fr.withColumn("build_id", F.lit(bid))
-        ))
-        for tbl, _s, df, _v in tables
-    ))
+    })
 
 
 def pq_append_to_index(
@@ -2699,68 +2678,37 @@ def pq_append_to_index(
     corpus as data, so corpus growth costs nothing there (quantizer
     DRIFT is a quality question, monitored by embedding_centroid_drift,
     answered by an explicit rebuild)."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
 
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    inp = HiveInput(spark, catalog)
-    # the codebook collect answers the stamp fence, the geometry probe
-    # AND the encoder's closure in ONE job (previously three jobs over
-    # the same KB-sized parquet — r14 optimization round, guide §1.2);
-    # it overlaps the independent codes stamp probe (guide §2.6)
-    codes = inp.read_table(ScanSpec(table=index_table))
-    (cb_rows, cb_stamp), c_stamp = run_concurrently(
-        lambda: _collect_stamped(
-            "pq_append_to_index", index_table, "codebooks",
-            inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-            rebuild="pq_build_index",
-        ),
-        lambda: _index_stamp(
-            "pq_append_to_index", index_table, "codes", codes,
-            rebuild="pq_build_index",
-        ),
-    )
-    stamps = {"codebooks": cb_stamp, "codes": c_stamp}
-    if len(set(stamps.values())) > 1:
-        raise ValueError(
-            f"pq_append_to_index: index {index_table} has mixed build_id "
-            f"stamps across its tables ({stamps}) — a rebuild was torn "
-            f"mid-way; appending would entrench the tear (new-codebook "
-            f"encodings into an old-codebook codes table). Re-run "
-            f"pq_build_index first."
-        )
-    bid = stamps["codes"]
-    if cb_rows[0]["cv"] is None:
-        raise ValueError(
-            f"pq_append_to_index: empty codebook table "
-            f"{index_table}_codebooks — run pq_build_index first"
-        )
-    num_subspaces = int(max(r["j"] for r in cb_rows) + 1)
-    dsub = len(cb_rows[0]["cv"])
-    codebooks = _local_codebooks(spark, cb_rows)
-    if not _check_append_batch(
-        "pq_append_to_index", new_vectors, num_subspaces * dsub,
-        vec_col, id_col,
-    ):
+    op = "pq_append_to_index"
+    bid, p = read_set(spark, catalog, _PQ_INDEX, index_table, op)
+    m, dsub = _check_stored_codebooks(op, index_table, p["codebooks"])
+    if not _check_append_batch(op, new_vectors, m * dsub, vec_col, id_col):
         return catalog.current_version(index_table)  # empty batch: no-op
     new_codes = pq_encode(
-        new_vectors, codebooks.select("j", "code", "cv"), num_subspaces,
+        new_vectors, _local_codebooks(spark, p["codebooks"]), m,
         vec_col=vec_col, id_col=id_col,
     )
-    fresh = (
-        new_codes.join(codes.select("id"), "id", "left_anti")
-        .withColumn("build_id", F.lit(bid))
-        # cut lineage: the plan anti-joins the very table the append
-        # rewrites (the same-path-scan lesson, ingestion.py:377-384).
-        # eager=False + count(): ONE job materializes the checkpoint AND
-        # answers the emptiness probe (was checkpoint + isEmpty = two)
-        .localCheckpoint(eager=False)
-    )
-    if fresh.count() == 0:
+    fresh, n = append_fresh(new_codes, p["codes"], bid)
+    if n == 0:
         return catalog.current_version(index_table)
     return HiveOutput(spark, catalog).append_table(
-        WriteSpec(table=index_table), fresh, note="pq_append_to_index"
+        WriteSpec(table=index_table), fresh, note=op
+    )
+
+
+def _pq_served(spark, catalog, index_table: str, op: str,
+               num_subspaces: int) -> tuple:
+    """(build_id, codes, codebooks, dsub) of a fenced stored PQ index
+    whose subspace count matches ``num_subspaces`` — the served side of
+    pq_query_index and serve_pq_topk_stream."""
+    bid, p = read_set(spark, catalog, _PQ_INDEX, index_table, op)
+    _m, dsub = _check_stored_codebooks(
+        op, index_table, p["codebooks"], num_subspaces
+    )
+    return (
+        bid, p["codes"].select("id", "codes"),
+        _local_codebooks(spark, p["codebooks"]), dsub,
     )
 
 
@@ -2789,10 +2737,9 @@ def _check_append_batch(
     ).first()
     if row is None or row["n"] == 0:
         return False
-    # NULL ids first, with their own message: countDistinct SKIPS NULLs,
-    # so without this a NULL-id batch fell through to the duplicate
-    # branch with a wrong diagnosis (and an all-NULL-id batch reported
-    # "n-0 duplicates") — r13 ADVICE.
+    # NULL ids first, with their own message: countDistinct skips NULLs,
+    # so a NULL-id batch would otherwise reach the duplicate branch with
+    # a wrong diagnosis
     if row["n_null_ids"] > 0:
         raise ValueError(
             f"{op}: {row['n_null_ids']} of {row['n']} batch rows have a "
@@ -2840,52 +2787,12 @@ def pq_query_index(
     match the stored codebooks' subspace count (a mismatch sums the
     wrong LUT cells — truncated or NULL scores, no error, with ANSI
     off)."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
     _require_small_query_side(
         queries.select(F.col(id_col)), "pq_query_index (broadcast LUTs)"
     )
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    inp = HiveInput(spark, catalog)
-    # one codebook collect answers the stamp fence, the geometry probe
-    # and the broadcast LUT build (previously three jobs over the same
-    # KB-sized parquet — r14 optimization round, guide §1.2); it
-    # overlaps the independent codes stamp probe (guide §2.6)
-    codes = inp.read_table(ScanSpec(table=index_table))
-    (cb_rows, cb_stamp), c_stamp = run_concurrently(
-        lambda: _collect_stamped(
-            "pq_query_index", index_table, "codebooks",
-            inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-            rebuild="pq_build_index",
-        ),
-        lambda: _index_stamp(
-            "pq_query_index", index_table, "codes", codes,
-            rebuild="pq_build_index",
-        ),
+    _bid, codes, codebooks, dsub = _pq_served(
+        spark, catalog, index_table, "pq_query_index", num_subspaces
     )
-    stamps = {"codebooks": cb_stamp, "codes": c_stamp}
-    if len(set(stamps.values())) > 1:
-        raise ValueError(
-            f"pq_query_index: index {index_table} has mixed build_id "
-            f"stamps across its tables ({stamps}) — a rebuild was torn "
-            f"mid-way. Re-run pq_build_index before serving."
-        )
-    codes = codes.select("id", "codes")
-    if cb_rows[0]["cv"] is None:
-        raise ValueError(
-            f"pq_query_index: empty codebook table {index_table}_codebooks"
-        )
-    m = int(max(r["j"] for r in cb_rows) + 1)
-    if m != num_subspaces:
-        raise ValueError(
-            f"pq_query_index: num_subspaces={num_subspaces} does not "
-            f"match the stored index ({index_table}_codebooks holds "
-            f"{m} subspaces). Pass num_subspaces={m} — "
-            f"a mismatch would misindex the stored codes."
-        )
-    dsub = len(cb_rows[0]["cv"])
-    codebooks = _local_codebooks(spark, cb_rows)
     qu = _unit_vectors(queries, vec_col, id_col)
     return _pq_adc_topk(codes, qu, codebooks, k, num_subspaces, dsub)
 
@@ -2907,33 +2814,30 @@ def pq_index_consistency_check(
     operator computes (same sampled codebooks -> same codes -> same
     ranked rows): n_queries, n_served (ranked rows from the stored
     index), n_mismatch (full-row anti-join both ways, must be 0). The
-    ivf_index_consistency_check contract, for PQ.
-
-    ONE plan, each leg materialized once (r14 optimization round):
-    reuse() + aggregate-branch counts — the previous eager .count()
-    calls recomputed the served leg 3x and the direct leg (a full
-    corpus re-encode) 2x (guide §1.2; §5 reuse). The two legs are
-    independent (stored-table reads vs corpus re-encode), and reuse()
-    BLOCKS while AQE runs the leg's stages — so they build
-    concurrently (guide §2.6: overlap independent jobs)."""
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
-
+    ivf_index_consistency_check contract, for PQ."""
     cols = ["query_id", "neighbor_id", "adc_score", "rank"]
-    served, direct = run_concurrently(
-        lambda: reuse(pq_query_index(
+    return _consistency_row(
+        queries, id_col,
+        lambda: pq_query_index(
             spark, catalog, index_table, queries, k, num_subspaces,
             vec_col, id_col,
-        ).select(cols)),
-        lambda: reuse(pq_topk(
+        ).select(cols),
+        lambda: pq_topk(
             corpus, queries, k, num_subspaces, centroid_stride, max_codes,
             None, vec_col, id_col,
-        ).select(cols)),
+        ).select(cols),
     )
-    mism = served.exceptAll(direct).unionAll(
-        direct.exceptAll(served)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_mismatch"))
+
+
+def _consistency_row(queries: DataFrame, id_col: str, served_fn,
+                     direct_fn) -> DataFrame:
+    """(n_queries, n_served, n_mismatch) of the ANN index consistency
+    checks as ONE lazy plan. Each leg is reuse()d so the counts read it
+    once; the legs are independent and reuse() blocks while AQE runs a
+    leg's stages, so they are built concurrently."""
+    served, direct = run_concurrently(
+        lambda: reuse(served_fn()), lambda: reuse(direct_fn())
+    )
     n_q = queries.select(F.col(id_col)).distinct().agg(
         F.count(F.lit(1)).cast("long").alias("n_queries")
     )
@@ -2941,7 +2845,7 @@ def pq_index_consistency_check(
         F.count(F.lit(1)).cast("long").alias("n_served")
     )
     return n_q.crossJoin(F.broadcast(n_served)).crossJoin(
-        F.broadcast(mism)
+        F.broadcast(mismatch_count(served, direct))
     )
 
 
@@ -2980,14 +2884,10 @@ def ivf_pq_build_index(
     ``build_id`` stamp, and ivf_pq_query_index REFUSES to serve a set of
     tables whose stamps disagree — a torn rebuild is a loud error, never
     silently-wrong scores. (The same crash-visible-not-crash-silent rule
-    as the ingestion artifacts' commit order, operators/ingestion.py.)"""
-    from pyspark.sql import types as T
-
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-    from hive_io_experimental_spark.schema import HiveTableSchema
-
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
+    as the ingestion artifacts' commit order, operators/ingestion.py.)
+    Lists and codes are VERSIONED (ivf_pq_append_to_index folds new
+    vectors in as snapshot appends); centroids and codebooks are the
+    immutable geometry."""
     if centroid_stride is None:
         centroid_stride = resolve_ivf_stride(corpus.count())
     cents = corpus.filter(F.col(id_col) % centroid_stride == 0).select(
@@ -2997,13 +2897,9 @@ def ivf_pq_build_index(
         codebooks = pq_codebooks_sampled(
             corpus, num_subspaces, pq_stride, max_codes, vec_col, id_col
         )
-    # serve BOTH consumers of each geometry table (the Arrow closures
-    # and the table writes) from one collect — previously the centroid
-    # filter-scan and the codebook sample/explode/window plans each ran
-    # twice per build (r14 optimization round, guide §1.2); doubles
-    # round-trip py4j exactly, so the written rows are bit-identical.
-    # The two collects are independent corpus-side jobs — overlapped
-    # (guide §2.6).
+    # one collect per geometry table serves both its consumers (the
+    # Arrow closures and the table write); doubles round-trip py4j
+    # exactly, so the written rows are bit-identical
     cent_rows, cb_rows = run_concurrently(
         lambda: [r.asDict() for r in cents.collect()],
         lambda: [r.asDict() for r in codebooks.collect()],
@@ -3015,102 +2911,31 @@ def ivf_pq_build_index(
         )
     if not cb_rows:
         raise ValueError("ivf_pq_build_index: empty codebook frame")
-    from pyspark.sql import types as _T
-
     id_type = corpus.schema[id_col].dataType
-    cents = spark.createDataFrame(
-        [(r["cid"], r["cv"]) for r in cent_rows],
-        _T.StructType([
-            _T.StructField("cid", id_type),
-            _T.StructField("cv", _T.ArrayType(_T.DoubleType())),
-        ]),
-    )
-    codebooks = _local_codebooks(spark, cb_rows)
-    dsub = len(cb_rows[0]["cv"])
-    # ONE corpus pass yields BOTH index halves (was two: a centroid-
-    # assignment pass plus a PQ-encode pass — each a full read of the
-    # raw embedding column); reuse() materializes the narrow fused rows
-    # once and both table writes read the blocks. spread() first: the
-    # assignment pass previously ran unspread, i.e. one task on a
-    # single-row-group input (r14 optimization round, guide §1.2/§2).
-    from hive_io_experimental_spark.functions.reuse import reuse
-
+    # ONE corpus pass yields both index halves: reuse() materializes the
+    # narrow fused rows once and both table writes read the blocks;
+    # spread() first, or a single-row-group input runs in one task
     c = spread(corpus).select(
         F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
     ).withColumn("_nrm", l2_norm(F.col("_v")))
     fused = reuse(_ivf_pq_encode_assign_pandas(
-        c, cent_rows, cb_rows, num_subspaces, dsub
+        c, cent_rows, cb_rows, num_subspaces, len(cb_rows[0]["cv"])
     ))
-    lists = fused.select("cid", "id")
-    codes = fused.filter(F.col("codes").isNotNull()).select("id", "codes")
-    out = HiveOutput(spark, catalog)
-    id_type = corpus.schema[id_col].dataType
-    # one stamp per rebuild; a torn rebuild leaves mixed stamps, which
-    # ivf_pq_query_index rejects instead of serving mixed geometry
-    import uuid
-
-    bid = uuid.uuid4().hex
-    # lists + codes are VERSIONED: ivf_pq_append_to_index folds new
-    # vectors in as snapshot appends (and time-travel reads the index
-    # as-of any tick); centroids + codebooks are the immutable geometry
-    tables = (
-        (
-            f"{index_table}_centroids",
-            HiveTableSchema((
-                ("cid", id_type),
-                ("cv", T.ArrayType(T.DoubleType())),
-                ("build_id", T.StringType()),
-            )),
-            cents,
-            False,
+    write_set(spark, catalog, _IVF_PQ_INDEX, index_table, {
+        "centroids": (
+            (("cid", id_type), ("cv", T.ArrayType(T.DoubleType()))),
+            [(r["cid"], r["cv"]) for r in cent_rows],
         ),
-        (
-            f"{index_table}_lists",
-            HiveTableSchema((
-                ("cid", id_type),
-                ("id", id_type),
-                ("build_id", T.StringType()),
-            )),
-            lists,
-            True,
+        "codebooks": (_CODEBOOK_COLS, _local_codebooks(spark, cb_rows)),
+        "lists": (
+            (("cid", id_type), ("id", id_type)),
+            fused.select("cid", "id"),
         ),
-        (
-            f"{index_table}_codebooks",
-            HiveTableSchema((
-                ("j", T.IntegerType()),
-                ("code", T.IntegerType()),
-                ("cv", T.ArrayType(T.DoubleType())),
-                ("build_id", T.StringType()),
-            )),
-            codebooks,
-            False,
+        "codes": (
+            (("id", id_type), ("codes", T.ArrayType(T.LongType()))),
+            fused.filter(F.col("codes").isNotNull()).select("id", "codes"),
         ),
-        (
-            index_table,
-            HiveTableSchema((
-                ("id", id_type),
-                ("codes", T.ArrayType(T.LongType())),
-                ("build_id", T.StringType()),
-            )),
-            codes,
-            True,
-        ),
-    )
-    for tbl, schema, _df, versioned in tables:
-        if catalog.table_exists(tbl):
-            catalog.drop_table(tbl, delete_data=True)
-        catalog.create_table(tbl, schema, versioned=versioned)
-    # the four writes are independent (any mid-way crash leaves mixed
-    # stamps or an empty table, which every read path refuses) — run
-    # them concurrently so the big lists/codes jobs overlap and the
-    # tiny geometry writes ride their task tails (guide §2.6); lists
-    # and codes both project from the reuse()d fused rows
-    run_concurrently(*(
-        (lambda t=tbl, fr=df: out.write_table(
-            WriteSpec(table=t), fr.withColumn("build_id", F.lit(bid))
-        ))
-        for tbl, _s, df, _v in tables
-    ))
+    })
 
 
 def ivf_pq_query_index(
@@ -3136,89 +2961,48 @@ def ivf_pq_query_index(
 
     Serving preconditions (raise, never silently-wrong scores): the four
     tables' ``build_id`` stamps must agree (a torn rebuild is refused —
-    four limit-1 probe jobs, no full scans), and ``num_subspaces`` must
-    match the stored codebooks' subspace count (a mismatch would index
-    past the stored codes/LUT arrays and, with ANSI off, surface as
-    silent NULL scores)."""
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
-    inp = HiveInput(spark, catalog)
-    # torn-rebuild fence: every table must carry the SAME build stamp.
-    # The two KB-sized geometry tables are collected ONCE each — their
-    # rows answer the stamp fence, the geometry check AND the driver-side
-    # query math; the corpus-sized lists/codes tables keep their
-    # one-sampled-row stamp probes (no full scan). The bounded query
-    # collect (the small-query guard) and the four probes are
-    # independent reads — overlapped, the guard first in call order so
-    # its error still wins.
-    lists = inp.read_table(ScanSpec(table=f"{index_table}_lists"))
-    codes = inp.read_table(ScanSpec(table=index_table))
-    (
-        (qid_type, q_rows),
-        (cent_rows, cent_stamp),
-        (cb_rows, cb_stamp),
-        l_stamp,
-        c_stamp,
-    ) = run_concurrently(
-        lambda: _collect_ivf_pq_queries(
+    two geometry collects and two limit-1 probes, no full scans), and
+    ``num_subspaces`` must match the stored codebooks' subspace count (a
+    mismatch would index past the stored codes/LUT arrays and, with ANSI
+    off, surface as silent NULL scores)."""
+    op = "ivf_pq_query_index"
+    # the bounded query collect (the small-query guard) overlaps the
+    # fence probes and stays first in call order, so its error wins
+    _bid, p = read_set(
+        spark, catalog, _IVF_PQ_INDEX, index_table, op,
+        first={"queries": lambda: _collect_ivf_pq_queries(
             queries, "ivf_pq_query_index (broadcast probes + LUTs)",
             vec_col, id_col,
-        ),
-        lambda: _collect_stamped(
-            "ivf_pq_query_index", index_table, "centroids",
-            inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
-            rebuild="ivf_pq_build_index",
-        ),
-        lambda: _collect_stamped(
-            "ivf_pq_query_index", index_table, "codebooks",
-            inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-            rebuild="ivf_pq_build_index",
-        ),
-        lambda: _index_stamp(
-            "ivf_pq_query_index", index_table, "lists", lists,
-            rebuild="ivf_pq_build_index",
-        ),
-        lambda: _index_stamp(
-            "ivf_pq_query_index", index_table, "codes", codes,
-            rebuild="ivf_pq_build_index",
-        ),
+        )},
     )
-    stamps = {"centroids": cent_stamp, "codebooks": cb_stamp,
-              "lists": l_stamp, "codes": c_stamp}
-    if len(set(stamps.values())) > 1:
-        raise ValueError(
-            f"ivf_pq_query_index: index {index_table} has mixed build_id "
-            f"stamps across its tables ({stamps}) — a rebuild was torn "
-            f"mid-way. Re-run ivf_pq_build_index before serving."
-        )
-    _check_ivf_pq_codebooks(
-        "ivf_pq_query_index", index_table, cb_rows, num_subspaces
-    )
+    _check_stored_codebooks(op, index_table, p["codebooks"], num_subspaces)
+    qid_type, q_rows = p["queries"]
     return _ivf_pq_adc_rank(
-        lists.select("cid", "id"), codes.select("id", "codes"),
-        qid_type, q_rows, cent_rows, cb_rows, k, nprobe, num_subspaces,
-        op="ivf_pq_query_index",
+        p["lists"].select("cid", "id"), p["codes"].select("id", "codes"),
+        qid_type, q_rows, p["centroids"], p["codebooks"], k, nprobe,
+        num_subspaces, op=op,
     )
 
 
-def _check_ivf_pq_codebooks(
-    op: str, index_table: str, cb_rows: list, num_subspaces: int
-) -> None:
-    """Serving geometry check on the collected codebook rows: a non-empty
-    table whose subspace count matches ``num_subspaces``."""
+def _check_stored_codebooks(
+    op: str, index_table: str, cb_rows: list,
+    num_subspaces: int | None = None,
+) -> tuple:
+    """(m, dsub) of the collected stored codebook rows: a non-empty
+    table whose subspace count matches ``num_subspaces`` when given."""
     if not cb_rows or cb_rows[0]["cv"] is None:
         raise ValueError(
             f"{op}: empty codebook table {index_table}_codebooks"
         )
     m = int(max(r["j"] for r in cb_rows) + 1)
-    if m != num_subspaces:
+    if num_subspaces is not None and m != num_subspaces:
         raise ValueError(
             f"{op}: num_subspaces={num_subspaces} does not match the "
             f"stored index ({index_table}_codebooks holds {m} "
             f"subspaces). Pass num_subspaces={m} — a mismatch would "
             f"misindex the stored codes."
         )
+    return m, len(cb_rows[0]["cv"])
 
 
 def _collect_ivf_pq_queries(
@@ -3408,38 +3192,17 @@ def ivf_pq_index_consistency_check(
     produced the index — including ``codebooks=`` when the index was
     built with trained codebooks (the direct path would otherwise
     recompute sampled ones and report spurious mismatches)."""
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
-
     cols = ["query_id", "neighbor_id", "adc_score", "rank"]
-    # ONE plan, each leg materialized once (r14 optimization round):
-    # reuse() + aggregate-branch counts — the previous eager .count()
-    # calls recomputed the served leg 3x and the direct leg (a full
-    # corpus re-encode + re-assign) 2x (guide §1.2 / §5). The legs are
-    # independent and reuse() blocks while AQE runs a leg's stages, so
-    # they build concurrently (guide §2.6).
-    served, direct = run_concurrently(
-        lambda: reuse(ivf_pq_query_index(
+    return _consistency_row(
+        queries, id_col,
+        lambda: ivf_pq_query_index(
             spark, catalog, index_table, queries, k, nprobe,
             num_subspaces, vec_col, id_col,
-        ).select(cols)),
-        lambda: reuse(ivf_pq_topk(
+        ).select(cols),
+        lambda: ivf_pq_topk(
             corpus, queries, k, centroid_stride, nprobe, num_subspaces,
             pq_stride, max_codes, codebooks, vec_col, id_col,
-        ).select(cols)),
-    )
-    mism = served.exceptAll(direct).unionAll(
-        direct.exceptAll(served)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_mismatch"))
-    n_q = queries.select(F.col(id_col)).distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries")
-    )
-    n_served = served.agg(
-        F.count(F.lit(1)).cast("long").alias("n_served")
-    )
-    return n_q.crossJoin(F.broadcast(n_served)).crossJoin(
-        F.broadcast(mism)
+        ).select(cols),
     )
 
 
@@ -3477,116 +3240,42 @@ def ivf_pq_append_to_index(
     returns the committed snapshot version of the codes table (or the
     current one on a no-op).
     """
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
 
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
-
-    inp = HiveInput(spark, catalog)
-    # one collect per KB-sized geometry table answers stamp + geometry
-    # + Arrow closures; lists/codes keep sampled-row stamp probes
-    # (r14 optimization round, guide §1.2 — was 4 probes + collect +
-    # geometry job). All four probe jobs are independent reads of
-    # different tables — overlapped (guide §2.6).
-    lists = inp.read_table(ScanSpec(table=f"{index_table}_lists"))
-    codes = inp.read_table(ScanSpec(table=index_table))
-    (cents_rows, cent_stamp), (cb_rows, cb_stamp), l_stamp, c_stamp = (
-        run_concurrently(
-            lambda: _collect_stamped(
-                "ivf_pq_append_to_index", index_table, "centroids",
-                inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _collect_stamped(
-                "ivf_pq_append_to_index", index_table, "codebooks",
-                inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_append_to_index", index_table, "lists", lists,
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_append_to_index", index_table, "codes", codes,
-                rebuild="ivf_pq_build_index",
-            ),
-        )
-    )
-    stamps = {"centroids": cent_stamp, "codebooks": cb_stamp,
-              "lists": l_stamp, "codes": c_stamp}
-    if len(set(stamps.values())) > 1:
-        raise ValueError(
-            f"ivf_pq_append_to_index: index {index_table} has mixed "
-            f"build_id stamps across its tables ({stamps}) — a rebuild "
-            f"was torn mid-way; appending onto it would entrench the "
-            f"tear. Re-run ivf_pq_build_index first."
-        )
-    bid = stamps["codes"]
-    if cb_rows[0]["cv"] is None:
-        raise ValueError(
-            f"ivf_pq_append_to_index: empty codebook table "
-            f"{index_table}_codebooks"
-        )
-    num_subspaces = int(max(r["j"] for r in cb_rows) + 1)
-    dsub = len(cb_rows[0]["cv"])
-    if not _check_append_batch(
-        "ivf_pq_append_to_index", new_vectors, num_subspaces * dsub,
-        vec_col, id_col,
-    ):
+    op = "ivf_pq_append_to_index"
+    bid, p = read_set(spark, catalog, _IVF_PQ_INDEX, index_table, op)
+    m, dsub = _check_stored_codebooks(op, index_table, p["codebooks"])
+    if not _check_append_batch(op, new_vectors, m * dsub, vec_col, id_col):
         return catalog.current_version(index_table)  # empty batch: no-op
-    cent_rows = [{"cid": r["cid"], "cv": r["cv"]} for r in cents_rows]
-    # ONE batch pass yields both halves (was an assignment pass plus an
-    # encode pass over the same batch); spread() first — a single-file
-    # batch otherwise runs the whole pass in one task (r14 optimization
-    # round, guide §1.2/§2)
+    # ONE batch pass yields both halves; spread() first, or a
+    # single-file batch runs the whole pass in one task
     c = spread(new_vectors).select(
         F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
     ).withColumn("_nrm", l2_norm(F.col("_v")))
     fused = reuse(_ivf_pq_encode_assign_pandas(
-        c, cent_rows, cb_rows, num_subspaces, dsub
+        c, p["centroids"], p["codebooks"], m, dsub
     ))
-    new_lists = fused.select("cid", "id")
-    new_codes = fused.filter(F.col("codes").isNotNull()).select(
-        "id", "codes"
-    )
     # per-table anti-joins (not one shared id set): after a torn append
-    # the two tables disagree on which ids they hold, and each half must
-    # independently complete on retry. localCheckpoint cuts lineage —
-    # each plan anti-joins the very table its append rewrites (the
-    # append_to_artifacts same-path-scan lesson, ingestion.py:377-384).
-    # eager=False + count(): one job per half materializes the
-    # checkpoint AND answers the emptiness probe (was checkpoint +
-    # isEmpty = two jobs per half — r14 optimization round)
-    # the two halves' checkpoint+count chains are independent reads of
-    # the shared fused blocks — built and counted concurrently (guide
-    # §2.6); the APPENDS below stay strictly ordered (lists first,
+    # the two tables disagree on which ids they hold, and each half
+    # must complete on its own on retry. The two checkpoint+count chains
+    # run concurrently; the APPENDS stay strictly ordered (lists first,
     # codes second — the documented torn-append direction)
-    def _half(new_half, stored):
-        fresh = (
-            new_half.join(stored.select("id"), "id", "left_anti")
-            .withColumn("build_id", F.lit(bid))
-            .localCheckpoint(eager=False)
-        )
-        return fresh, fresh.count()
-
     (fresh_lists, n_lists), (fresh_codes, n_codes) = run_concurrently(
-        lambda: _half(new_lists, lists),
-        lambda: _half(new_codes, codes),
+        lambda: append_fresh(fused.select("cid", "id"), p["lists"], bid),
+        lambda: append_fresh(
+            fused.filter(F.col("codes").isNotNull()).select("id", "codes"),
+            p["codes"], bid,
+        ),
     )
     out = HiveOutput(spark, catalog)
     if n_lists > 0:
         out.append_table(
-            WriteSpec(table=f"{index_table}_lists"), fresh_lists,
-            note="ivf_pq_append_to_index",
+            WriteSpec(table=f"{index_table}_lists"), fresh_lists, note=op
         )
     if n_codes == 0:
         return catalog.current_version(index_table)
-    return out.append_table(
-        WriteSpec(table=index_table), fresh_codes,
-        note="ivf_pq_append_to_index",
-    )
+    return out.append_table(WriteSpec(table=index_table), fresh_codes,
+                            note=op)
 
 
 def ivf_pq_index_repair(
@@ -3625,59 +3314,17 @@ def ivf_pq_index_repair(
     Scale: two id-projection anti-joins (one long per indexed vector)
     plus |torn| × (nlist + ksub) repair dots — nightly-maintenance
     shaped, no corpus rescan beyond one semi-join on the torn ids."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
 
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    inp = HiveInput(spark, catalog)
-    # one collect per KB-sized geometry table answers stamp + geometry
-    # + Arrow closures (r14 optimization round, guide §1.2); all four
-    # probe jobs are independent reads of different tables — overlapped
-    # (guide §2.6)
-    lists = inp.read_table(ScanSpec(table=f"{index_table}_lists"))
-    codes = inp.read_table(ScanSpec(table=index_table))
-    (cents_rows, cent_stamp), (cb_rows, cb_stamp), l_stamp, c_stamp = (
-        run_concurrently(
-            lambda: _collect_stamped(
-                "ivf_pq_index_repair", index_table, "centroids",
-                inp.read_table(ScanSpec(table=f"{index_table}_centroids")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _collect_stamped(
-                "ivf_pq_index_repair", index_table, "codebooks",
-                inp.read_table(ScanSpec(table=f"{index_table}_codebooks")),
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_index_repair", index_table, "lists", lists,
-                rebuild="ivf_pq_build_index",
-            ),
-            lambda: _index_stamp(
-                "ivf_pq_index_repair", index_table, "codes", codes,
-                rebuild="ivf_pq_build_index",
-            ),
-        )
+    bid, p = read_set(
+        spark, catalog, _IVF_PQ_INDEX, index_table, "ivf_pq_index_repair"
     )
-    stamps = {"centroids": cent_stamp, "codebooks": cb_stamp,
-              "lists": l_stamp, "codes": c_stamp}
-    if len(set(stamps.values())) > 1:
-        raise ValueError(
-            f"ivf_pq_index_repair: index {index_table} has mixed "
-            f"build_id stamps across its tables ({stamps}) — that is a "
-            f"torn REBUILD (geometry damage), not a torn append; this "
-            f"verb only completes missing append halves. Re-run "
-            f"ivf_pq_build_index."
-        )
-    bid = stamps["codes"]
-    list_ids = lists.select("id")
-    code_ids = codes.select("id")
+    list_ids = p["lists"].select("id")
+    code_ids = p["codes"].select("id")
+
     # localCheckpoint: the repair appends to the very tables these
-    # diffs scan (the same-path-scan lesson, ingestion.py:377-384).
-    # eager=False + count(): one job per diff materializes the
-    # checkpoint AND counts it (was checkpoint + count = two jobs
-    # each); the two diffs are independent anti-joins — built and
-    # counted concurrently (guide §2.6)
+    # diffs scan (the same-path-scan rule, operators/ingestion.py);
+    # eager=False + count() materializes and counts in one job
     def _diff(a, b):
         need = a.join(b, "id", "left_anti").distinct() \
             .localCheckpoint(eager=False)
@@ -3699,32 +3346,29 @@ def ivf_pq_index_repair(
 
     if corpus is None or (n_need_codes == 0 and n_need_lists == 0):
         return _report(0, 0)
-    num_subspaces = int(max(r["j"] for r in cb_rows) + 1)
-    dsub = len(cb_rows[0]["cv"])
-    cent_rows = [{"cid": r["cid"], "cv": r["cv"]} for r in cents_rows]
+    num_subspaces, dsub = _check_stored_codebooks(
+        "ivf_pq_index_repair", index_table, p["codebooks"]
+    )
     out = HiveOutput(spark, catalog)
     src = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_vec")
     )
 
     def _encode_assign(vecs: DataFrame) -> DataFrame:
-        # the ONE fused Arrow pass the build/append paths use
-        # (_ivf_pq_encode_assign_pandas): each repaired half projects
-        # the column it needs from the same builder — pq_encode would
-        # re-collect the codebooks and re-spread per call, and the
-        # fence above already guarantees every row is encodable, so
-        # the fused pass is row-identical to the single-purpose
-        # encoders (the r14 bit-identity argument, oracle-pinned)
+        # the fused pass the build/append paths use: each repaired half
+        # projects the column it needs, and the fence above guarantees
+        # every row is encodable, so the output is row-identical to the
+        # single-purpose encoders
         c = spread(vecs.select(
             "id", _as_double("_vec").alias("_v")
         ).withColumn("_nrm", l2_norm(F.col("_v"))))
         return _ivf_pq_encode_assign_pandas(
-            c, cent_rows, cb_rows, num_subspaces, dsub
+            c, p["centroids"], p["codebooks"], num_subspaces, dsub
         )
 
     def _vectors_for(ids: DataFrame, n_ids: int, half: str) -> DataFrame:
         # eager=False: the hygiene aggregate below materializes the
-        # checkpoint in the same job (was two jobs)
+        # checkpoint in the same job
         vecs = src.join(ids, "id").localCheckpoint(eager=False)
         probe = vecs.agg(
             F.count(F.lit(1)).alias("n"),
@@ -4023,58 +3667,6 @@ def multiprobe_recall_report(
     )
 
 
-def _index_stamp(op: str, index_table: str, table_label: str,
-                 df, rebuild: str) -> str:
-    """One sampled build_id from a persisted index table, with the two
-    silent-wrong cases turned into loud errors: a MISSING build_id
-    column (an index persisted before the stamp existed — rebuild to
-    migrate) and an EMPTY table (a rebuild torn between drop/create and
-    write — every legitimate build writes >= 1 row because empty corpora
-    are refused at build time, so an empty table can ONLY be a torn
-    rebuild). The empty case previously slipped through the mixed-stamp
-    check (None was treated as 'no opinion') and served zero candidates
-    for every query with no error."""
-    if "build_id" not in df.columns:
-        raise ValueError(
-            f"{op}: index {index_table}'s {table_label} table has no "
-            f"build_id column — it predates the torn-rebuild stamp. "
-            f"Re-run {rebuild} to migrate it."
-        )
-    r = df.select("build_id").first()
-    if r is None:
-        raise ValueError(
-            f"{op}: index {index_table}'s {table_label} table is EMPTY "
-            f"— a rebuild was torn between create and write. Re-run "
-            f"{rebuild} before serving."
-        )
-    return r["build_id"]
-
-
-def _collect_stamped(op: str, index_table: str, table_label: str,
-                     df, rebuild: str) -> tuple[list, str]:
-    """Collect a KB-sized stamped geometry table (centroids/codebooks)
-    ONCE and return (rows, stamp) — the stamp fence and the closure
-    data in one job, where the read paths used to run a stamp probe
-    job AND a separate collect/geometry job over the same tiny parquet
-    (r14 optimization round, guide §1.2). Same fences as _index_stamp:
-    missing build_id column and empty table raise with the same
-    wording."""
-    if "build_id" not in df.columns:
-        raise ValueError(
-            f"{op}: index {index_table}'s {table_label} table has no "
-            f"build_id column — it predates the torn-rebuild stamp. "
-            f"Re-run {rebuild} to migrate it."
-        )
-    rows = [r.asDict() for r in df.collect()]
-    if not rows:
-        raise ValueError(
-            f"{op}: index {index_table}'s {table_label} table is EMPTY "
-            f"— a rebuild was torn between create and write. Re-run "
-            f"{rebuild} before serving."
-        )
-    return rows, rows[0]["build_id"]
-
-
 def _local_codebooks(spark, cb_rows: list):
     """Rebuild the codebook frame from collected rows (exact: doubles
     round-trip py4j bit-identically) so downstream broadcasts read a
@@ -4122,14 +3714,9 @@ def lsh_build_index(
     lsh_query_index refuses mixed stamps (the ivf_pq torn-rebuild
     fence). Rebuild = explicit drop + recreate under the catalog's
     strict write preconditions (reference OutputConf parity,
-    output/HiveApiOutputFormat.java:240-262)."""
-    import uuid
-
-    from pyspark.sql import types as T
-
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-    from hive_io_experimental_spark.schema import HiveTableSchema
-
+    output/HiveApiOutputFormat.java:240-262). The bucket table is
+    VERSIONED (lsh_append_to_index folds new vectors in as snapshots);
+    meta is the immutable build-time record of the plane family."""
     probe = corpus.agg(
         F.count(F.lit(1)).alias("n"),
         F.first(F.size(F.col(vec_col))).alias("dim"),
@@ -4138,56 +3725,20 @@ def lsh_build_index(
         raise ValueError("lsh_build_index: empty corpus")
     if num_planes is None:
         num_planes = resolve_num_planes(probe["n"])
-    buckets = hyperplane_lsh_buckets(
-        corpus, num_planes, vec_col, id_col, dim=probe["dim"]
-    )
-    bid = uuid.uuid4().hex
-    id_type = corpus.schema[id_col].dataType
-    meta = spark.createDataFrame(
-        [(num_planes, int(probe["dim"]), int(probe["n"]), bid)],
-        "num_planes int, dim int, n_vectors long, build_id string",
-    )
-    out = HiveOutput(spark, catalog)
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    # the bucket table is VERSIONED: lsh_append_to_index folds new
-    # vectors in as snapshots (and time-travel reads the index as-of any
-    # ingestion tick); meta is the immutable build-time record of the
-    # plane family
-    tables = (
-        (
-            f"{index_table}_meta",
-            HiveTableSchema((
-                ("num_planes", T.IntegerType()),
-                ("dim", T.IntegerType()),
-                ("n_vectors", T.LongType()),
-                ("build_id", T.StringType()),
-            )),
-            meta,
-            False,
+    write_set(spark, catalog, _LSH_INDEX, index_table, {
+        "meta": (
+            (("num_planes", T.IntegerType()), ("dim", T.IntegerType()),
+             ("n_vectors", T.LongType())),
+            [(num_planes, int(probe["dim"]), int(probe["n"]))],
         ),
-        (
-            index_table,
-            HiveTableSchema((
-                ("id", id_type),
-                ("bucket", T.LongType()),
-                ("build_id", T.StringType()),
-            )),
-            buckets.withColumn("build_id", F.lit(bid)),
-            True,
+        "buckets": (
+            (("id", corpus.schema[id_col].dataType),
+             ("bucket", T.LongType())),
+            hyperplane_lsh_buckets(
+                corpus, num_planes, vec_col, id_col, dim=probe["dim"]
+            ),
         ),
-    )
-    for tbl, schema, _df, versioned in tables:
-        if catalog.table_exists(tbl):
-            catalog.drop_table(tbl, delete_data=True)
-        catalog.create_table(tbl, schema, versioned=versioned)
-    # independent writes (mixed-stamp / empty-table crash states are
-    # refused by lsh_query_index): the one-row meta write rides the
-    # corpus-sized bucket write's task tail (guide §2.6)
-    run_concurrently(*(
-        (lambda t=tbl, fr=df: out.write_table(WriteSpec(table=t), fr))
-        for tbl, _s, df, _v in tables
-    ))
+    })
 
 
 def lsh_append_to_index(
@@ -4208,105 +3759,47 @@ def lsh_append_to_index(
     version does not advance). The appended rows carry the ORIGINAL
     build_id (the plane family is the index identity; appends never
     change geometry), so the torn-rebuild fence stays valid, and
-    time-travel reads serve the index as-of any tick. Returns the
-    committed snapshot version (or the current one on a no-op)."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
+    time-travel reads serve the index as-of any tick. Appending onto
+    mixed stamps is refused. Returns the committed snapshot version (or
+    the current one on a no-op)."""
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
 
-    inp = HiveInput(spark, catalog)
-    meta = inp.read_table(ScanSpec(table=f"{index_table}_meta")).first()
-    if meta is None:
-        raise ValueError(
-            f"lsh_append_to_index: empty meta table {index_table}_meta — "
-            f"run lsh_build_index first"
-        )
+    op = "lsh_append_to_index"
+    bid, p = read_set(spark, catalog, _LSH_INDEX, index_table, op)
+    meta = p["meta"]
     if not _check_append_batch(
-        "lsh_append_to_index", new_vectors, int(meta["dim"]),
-        vec_col, id_col,
+        op, new_vectors, int(meta["dim"]), vec_col, id_col
     ):
         return catalog.current_version(index_table)  # empty batch: no-op
     qb = hyperplane_lsh_buckets(
         new_vectors, int(meta["num_planes"]), vec_col, id_col,
         dim=int(meta["dim"]),
     )
-    stored_ids = inp.read_table(ScanSpec(table=index_table)).select("id")
-    fresh = (
-        qb.join(stored_ids, "id", "left_anti")
-        .withColumn("build_id", F.lit(meta["build_id"]))
-        # cut lineage: the append rewrites the very table this plan
-        # anti-joins against (the append_to_artifacts same-path-scan
-        # lesson, operators/ingestion.py:377-384). eager=False +
-        # count(): one job materializes AND probes emptiness (was two)
-        .localCheckpoint(eager=False)
-    )
-    if fresh.count() == 0:
+    fresh, n = append_fresh(qb, p["buckets"], bid)
+    if n == 0:
         return catalog.current_version(index_table)
     return HiveOutput(spark, catalog).append_table(
-        WriteSpec(table=index_table), fresh, note="lsh_append_to_index"
+        WriteSpec(table=index_table), fresh, note=op
     )
 
 
-def lsh_query_index(
-    spark,
-    catalog,
-    index_table: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    probe_bits: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Multi-probe LSH top-k served from a PERSISTED bucket table: query
-    vectors are hashed into the stored plane family (num_planes from the
-    meta table), fanned out to their Hamming-``probe_bits`` probe set
-    (probe_bits=0 = single-probe), and equi-joined against the stored
-    buckets — the corpus-side plane projection never reruns. The exact
-    rescore then fetches only candidate vectors via an id join into
-    ``corpus``. Everything is a shuffle equi-join (no broadcast, no
-    size guard, fully lazy) — large query batches are the design
-    point, like cosine_topk_multiprobe_bucketed.
-
-    Returns (query_id, neighbor_id, cosine, rank), row-identical to the
-    direct multiprobe operators at the same plane count."""
-    if probe_bits not in (0, 1, 2):
-        raise ValueError(f"probe_bits must be 0, 1 or 2, got {probe_bits}")
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-
-    inp = HiveInput(spark, catalog)
-    meta_df = inp.read_table(ScanSpec(table=f"{index_table}_meta"))
-    buckets = inp.read_table(ScanSpec(table=index_table))
-    # two independent one-row probe jobs over different tables (§2.6)
-    meta, b_stamp = run_concurrently(
-        lambda: meta_df.first(),
-        lambda: _index_stamp(
-            "lsh_query_index", index_table, "buckets", buckets,
-            rebuild="lsh_build_index",
-        ),
-    )
-    if meta is None:
-        raise ValueError(
-            f"lsh_query_index: empty meta table {index_table}_meta"
-        )
-    if b_stamp != meta["build_id"]:
-        raise ValueError(
-            f"lsh_query_index: index {index_table} has mixed build_id "
-            f"stamps (meta {meta['build_id']!r} vs buckets "
-            f"{b_stamp!r}) — a rebuild was torn mid-way. "
-            f"Re-run lsh_build_index before serving."
-        )
+def _lsh_rank(meta, buckets: DataFrame, corpus: DataFrame,
+              queries: DataFrame, k: int, probe_bits: int, vec_col: str,
+              id_col: str) -> DataFrame:
+    """The LSH serving plan over a fenced (meta row, bucket frame):
+    hash the queries into the stored plane family, fan out to the
+    Hamming probe set, equi-join the stored buckets, rescore candidates
+    exactly and rank. Shared by lsh_query_index and the streaming twin's
+    foreachBatch (streaming/similarity.py), so stream output is batch
+    output by construction."""
+    num_planes = int(meta["num_planes"])
     qb = hyperplane_lsh_buckets(
-        queries, int(meta["num_planes"]), vec_col, id_col,
-        dim=int(meta["dim"]),
+        queries, num_planes, vec_col, id_col, dim=int(meta["dim"])
     )
     qp = qb.select(
         F.col("id").alias("query_id"),
         F.explode(
-            F.array(
-                *_hamming_probe_buckets(int(meta["num_planes"]), probe_bits)
-            )
+            F.array(*_hamming_probe_buckets(num_planes, probe_bits))
         ).alias("bucket"),
     )
     cand = (
@@ -4337,6 +3830,40 @@ def lsh_query_index(
     ).filter(F.col("rank") <= k)
 
 
+def lsh_query_index(
+    spark,
+    catalog,
+    index_table: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    probe_bits: int = 1,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Multi-probe LSH top-k served from a PERSISTED bucket table: query
+    vectors are hashed into the stored plane family (num_planes from the
+    meta table), fanned out to their Hamming-``probe_bits`` probe set
+    (probe_bits=0 = single-probe), and equi-joined against the stored
+    buckets — the corpus-side plane projection never reruns. The exact
+    rescore then fetches only candidate vectors via an id join into
+    ``corpus``. Everything is a shuffle equi-join (no broadcast, no
+    size guard, fully lazy) — large query batches are the design
+    point, like cosine_topk_multiprobe_bucketed.
+
+    Returns (query_id, neighbor_id, cosine, rank), row-identical to the
+    direct multiprobe operators at the same plane count."""
+    if probe_bits not in (0, 1, 2):
+        raise ValueError(f"probe_bits must be 0, 1 or 2, got {probe_bits}")
+    _bid, p = read_set(
+        spark, catalog, _LSH_INDEX, index_table, "lsh_query_index"
+    )
+    return _lsh_rank(
+        p["meta"], p["buckets"], corpus, queries, k, probe_bits, vec_col,
+        id_col,
+    )
+
+
 def lsh_index_consistency_check(
     spark,
     catalog,
@@ -4354,56 +3881,28 @@ def lsh_index_consistency_check(
     ranked rows): n_queries, n_served, n_mismatch (full-row anti-join
     both ways, must be 0). The ivf/pq/ivf_pq_index_consistency_check
     contract, for the LSH tier."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-
-    meta = HiveInput(spark, catalog).read_table(
-        ScanSpec(table=f"{index_table}_meta")
-    ).first()
-    if meta is None:
-        raise ValueError(
-            f"lsh_index_consistency_check: empty meta table "
-            f"{index_table}_meta"
-        )
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
+    _bid, p = read_set(
+        spark, catalog, _LSH_INDEX, index_table,
+        "lsh_index_consistency_check",
     )
-
+    num_planes = int(p["meta"]["num_planes"])
     cols = ["query_id", "neighbor_id", "cosine", "rank"]
-
-    def _served():
-        return reuse(lsh_query_index(
-            spark, catalog, index_table, corpus, queries, k, probe_bits,
-            vec_col, id_col,
-        ).select(cols))
 
     def _direct():
         if probe_bits == 0:
-            d = cosine_topk_bucketed(
-                corpus, queries, k, int(meta["num_planes"]), vec_col,
-                id_col,
-            )
-        else:
-            d = _multiprobe_topk(
-                corpus, queries, k, int(meta["num_planes"]), probe_bits,
-                vec_col, id_col, broadcast_queries=False,
-            )
-        return reuse(d.select(cols))
+            return cosine_topk_bucketed(
+                corpus, queries, k, num_planes, vec_col, id_col
+            ).select(cols)
+        return _multiprobe_topk(
+            corpus, queries, k, num_planes, probe_bits, vec_col, id_col,
+            broadcast_queries=False,
+        ).select(cols)
 
-    # ONE plan, each leg materialized once (r14 optimization round):
-    # reuse() + aggregate-branch counts — the eager .count() calls
-    # recomputed served 3x / direct 2x (guide §1.2 / §5). The legs are
-    # independent and reuse() blocks while AQE runs a leg's stages, so
-    # they build concurrently (guide §2.6).
-    served, direct = run_concurrently(_served, _direct)
-    mism = served.exceptAll(direct).unionAll(
-        direct.exceptAll(served)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_mismatch"))
-    n_q = queries.select(F.col(id_col)).distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries")
-    )
-    n_served = served.agg(
-        F.count(F.lit(1)).cast("long").alias("n_served")
-    )
-    return n_q.crossJoin(F.broadcast(n_served)).crossJoin(
-        F.broadcast(mism)
+    return _consistency_row(
+        queries, id_col,
+        lambda: _lsh_rank(
+            p["meta"], p["buckets"], corpus, queries, k, probe_bits,
+            vec_col, id_col,
+        ).select(cols),
+        _direct,
     )

@@ -12,10 +12,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_io_experimental_spark.functions.hashing import portable_hash64
 from hive_io_experimental_spark.functions.partitioning import spread
+from hive_io_experimental_spark.functions.reuse import reuse, run_concurrently
 from hive_io_experimental_spark.functions.textfns import normalize_text, word_tokens
+from hive_io_experimental_spark.operators.artifacts import (
+    ArtifactSet,
+    Part,
+    mismatch_count,
+    read_set,
+    write_set,
+)
 
 # Tiny language-marker lists. Deliberately small: the operator contract is a
 # deterministic heuristic (n-gram/stopword scoring), not a trained model.
@@ -1649,6 +1658,21 @@ def _nb_score_tokens(
     )
 
 
+# the persisted text artifacts (operators/artifacts.py). Meta is the
+# authority for each set and commits first; its count column says when
+# the other table is legitimately empty. An NB update replaces all three
+# tables under a new build_id, so a serving stream stops on it too.
+_NB_MODEL = ArtifactSet("model", "nb_build_model", (
+    Part("meta", "_meta", "meta"),
+    Part("priors", "_priors", "stamp"),
+    Part("likelihoods", "", "stamp", empty_if="n_model_rows"),
+), meta_first=True, change="UPDATED or REBUILT")
+_BPE_VOCAB = ArtifactSet("vocab", "bpe_build_vocab", (
+    Part("meta", "_meta", "meta"),
+    Part("merges", "", "rows", empty_if="n_merges"),
+), meta_first=True)
+
+
 def nb_build_model(
     spark,
     catalog,
@@ -1691,29 +1715,13 @@ def _nb_persist_model(
     """Stamp and write the three model tables (meta first — the torn-
     write fences in the read path key off that order). Shared by build
     and incremental update; returns the new build_id."""
-    import uuid
-
-    from pyspark.sql import types as T
-
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-    from hive_io_experimental_spark.schema import HiveTableSchema
-
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
-
-    bid = uuid.uuid4().hex
-    # materialize both frames once (r15): the meta aggregate AND the two
-    # table writes all read the checkpointed blocks — unmaterialized,
-    # each write re-ran the whole derivation (token-count joins) from
-    # scratch, a full extra pass per table (guide §1.2 / §5)
+    # materialize both frames once: the meta aggregate and both table
+    # writes read the checkpointed blocks, and the aggregate's job runs
+    # them BEFORE write_set's drop-and-recreate invalidates the stored
+    # tables an update still reads from
     priors_ext, lik_ext = run_concurrently(
         lambda: reuse(priors_ext), lambda: reuse(lik_ext)
     )
-    # ONE action for both meta aggregates (r14 optimization round): the
-    # two frames are tiny (labels / vocab x labels rows) and this single
-    # job also materializes the (checkpointed) inputs BEFORE the
-    # drop-and-recreate below invalidates the stored tables they read
     row = priors_ext.agg(
         F.count(F.lit(1)).alias("n_labels"),
         F.sum("n_docs").alias("n_docs_total"),
@@ -1723,69 +1731,29 @@ def _nb_persist_model(
             F.countDistinct("token").alias("vocab"),
         )
     ).first()
-    prow = lrow = row
-    if prow["n_labels"] == 0:
+    if row["n_labels"] == 0:
         raise ValueError(f"{op}: empty training frame")
-    meta = spark.createDataFrame(
-        [(int(prow["n_labels"]), int(lrow["n_rows"]),
-          int(prow["n_docs_total"]), int(lrow["vocab"] or 0),
-          last_update_fp, bid)],
-        "n_labels long, n_model_rows long, n_docs_total long, "
-        "vocab_size long, last_update_fp string, build_id string",
-    )
-    out = HiveOutput(spark, catalog)
-    tables = (
-        (
-            f"{model_table}_meta",
-            HiveTableSchema((
-                ("n_labels", T.LongType()),
-                ("n_model_rows", T.LongType()),
-                ("n_docs_total", T.LongType()),
-                ("vocab_size", T.LongType()),
-                ("last_update_fp", T.StringType()),
-                ("build_id", T.StringType()),
-            )),
-            meta,
+    return write_set(spark, catalog, _NB_MODEL, model_table, {
+        "meta": (
+            (("n_labels", T.LongType()), ("n_model_rows", T.LongType()),
+             ("n_docs_total", T.LongType()), ("vocab_size", T.LongType()),
+             ("last_update_fp", T.StringType())),
+            [(int(row["n_labels"]), int(row["n_rows"]),
+              int(row["n_docs_total"]), int(row["vocab"] or 0),
+              last_update_fp)],
         ),
-        (
-            f"{model_table}_priors",
-            HiveTableSchema((
-                ("label", T.StringType()),
-                ("n_docs", T.LongType()),
-                ("n_tokens", T.LongType()),
-                ("prior_bits", T.DoubleType()),
-                ("unseen_bits", T.DoubleType()),
-                ("build_id", T.StringType()),
-            )),
-            priors_ext.withColumn("build_id", F.lit(bid)),
+        "priors": (
+            (("label", T.StringType()), ("n_docs", T.LongType()),
+             ("n_tokens", T.LongType()), ("prior_bits", T.DoubleType()),
+             ("unseen_bits", T.DoubleType())),
+            priors_ext,
         ),
-        (
-            model_table,
-            HiveTableSchema((
-                ("label", T.StringType()),
-                ("token", T.StringType()),
-                ("c", T.LongType()),
-                ("bits", T.DoubleType()),
-                ("build_id", T.StringType()),
-            )),
-            lik_ext.withColumn("build_id", F.lit(bid)),
+        "likelihoods": (
+            (("label", T.StringType()), ("token", T.StringType()),
+             ("c", T.LongType()), ("bits", T.DoubleType())),
+            lik_ext,
         ),
-    )
-    for tbl, schema, _frame in tables:
-        if catalog.table_exists(tbl):
-            catalog.drop_table(tbl, delete_data=True)
-        catalog.create_table(tbl, schema)
-    # meta commits FIRST (the torn-write fences key off that order);
-    # the priors and likelihoods writes target independent tables whose
-    # any-partial state the mixed-stamp fence refuses, so they run
-    # concurrently and their task tails back-fill idle cores (guide
-    # §2.6 — same move as build_corpus_artifacts' artifact writes)
-    out.write_table(WriteSpec(table=tables[0][0]), tables[0][2])
-    run_concurrently(*(
-        (lambda t=tbl, fr=frame: out.write_table(WriteSpec(table=t), fr))
-        for tbl, _s, frame in tables[1:]
-    ))
-    return bid
+    })
 
 
 def nb_update_model(
@@ -1914,76 +1882,11 @@ def _nb_load_model_full(spark, catalog, model_table: str, op: str):
     needs the count columns too): raises on empty/pre-stamp/mixed-stamp
     tables; an empty likelihood table is legitimate only when meta
     records n_model_rows = 0 (an all-tokenless training corpus)."""
-    from hive_io_experimental_spark.functions.reuse import run_concurrently
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-    from hive_io_experimental_spark.operators.similarity import _index_stamp
-
-    inp = HiveInput(spark, catalog)
-    priors = inp.read_table(ScanSpec(table=f"{model_table}_priors"))
-    likelihoods = inp.read_table(ScanSpec(table=model_table))
-
-    def _lik_row():
-        # raw probe only — which fence applies depends on meta's
-        # n_model_rows, interpreted after the concurrent gather below
-        if "build_id" not in likelihoods.columns:
-            return (False, likelihoods.first())
-        return (True, likelihoods.select("build_id").first())
-
-    # the three one-row probe jobs read independent tables (guide §2.6)
-    meta, p_stamp, (l_has_col, l_row) = run_concurrently(
-        lambda: inp.read_table(
-            ScanSpec(table=f"{model_table}_meta")
-        ).first(),
-        lambda: _index_stamp(
-            op, model_table, "priors", priors, rebuild="nb_build_model"
-        ),
-        _lik_row,
-    )
-    if meta is None:
-        raise ValueError(
-            f"{op}: empty meta table {model_table}_meta — run "
-            f"nb_build_model first"
-        )
-    if int(meta["n_model_rows"]) > 0:
-        if not l_has_col:
-            raise ValueError(
-                f"{op}: index {model_table}'s likelihoods table has no "
-                f"build_id column — it predates the torn-rebuild stamp. "
-                f"Re-run nb_build_model to migrate it."
-            )
-        if l_row is None:
-            raise ValueError(
-                f"{op}: index {model_table}'s likelihoods table is EMPTY "
-                f"— a rebuild was torn between create and write. Re-run "
-                f"nb_build_model before serving."
-            )
-        l_stamp = l_row["build_id"]
-    elif l_row is not None:
-        # meta says the model is legitimately empty, but likelihood rows
-        # exist: a torn rebuild wrote the new meta/priors and crashed
-        # before dropping the OLD likelihoods table (nb_build_model
-        # writes meta first) — trusting meta here would silently score
-        # against the previous build's likelihoods, the exact case the
-        # stamp fence exists for (r12 ADVICE)
-        raise ValueError(
-            f"{op}: meta records n_model_rows = 0 for {model_table} but "
-            f"the likelihoods table is non-empty — a rebuild was torn "
-            f"mid-way and the stale likelihood rows survive from the "
-            f"previous build. Re-run nb_build_model."
-        )
-    else:
-        l_stamp = meta["build_id"]
-    if not (p_stamp == l_stamp == meta["build_id"]):
-        raise ValueError(
-            f"{op}: model {model_table} has mixed build_id stamps "
-            f"(meta {meta['build_id']!r}, priors {p_stamp!r}, "
-            f"likelihoods {l_stamp!r}) — a rebuild was torn mid-way. "
-            f"Re-run nb_build_model."
-        )
+    _bid, p = read_set(spark, catalog, _NB_MODEL, model_table, op)
     return (
-        meta,
-        priors.drop("build_id"),
-        likelihoods.drop("build_id"),
+        p["meta"],
+        p["priors"].drop("build_id"),
+        p["likelihoods"].drop("build_id"),
     )
 
 
@@ -2033,20 +1936,13 @@ def nb_model_consistency_check(
     the prior and likelihood tables (full-row anti-joins both ways) AND
     the end-to-end scores. Returns (n_labels, n_model_rows,
     n_prior_mismatch, n_likelihood_mismatch, n_score_mismatch) —
-    mismatches must be 0."""
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
+    mismatches must be 0.
 
-    # ONE plan, each leg materialized once (r14 optimization round):
-    # reuse() + aggregate-branch counts — the previous eager .count()
-    # calls re-ran the fresh-retrain derivation and BOTH scoring
-    # pipelines twice each (guide §1.2 / §5). Two further cuts (r15):
-    # the corpus is TOKENIZED ONCE into a shared frame that feeds the
-    # retrain's token counts and BOTH scoring legs (previously three
-    # corpus-sized tokenization passes, each with its own checkpoint),
-    # and the independent served/direct chains build concurrently —
-    # reuse() blocks while AQE runs a chain's stages (guide §2.6).
+    ONE plan, each leg materialized once by reuse(). The corpus is
+    tokenized once into a shared frame that feeds the retrain's token
+    counts and both scoring legs, and the independent served/direct
+    chains build concurrently (reuse() blocks while AQE runs a chain's
+    stages)."""
     s_priors0, s_lik0 = _nb_load_model(
         spark, catalog, model_table, "nb_model_consistency_check"
     )
@@ -2067,9 +1963,8 @@ def nb_model_consistency_check(
         sp, sl = run_concurrently(
             lambda: reuse(s_priors0), lambda: reuse(s_lik0)
         )
-        # score the served leg from the frames ALREADY loaded (and
-        # stamp-fenced) above — nb_score_from_model would re-run the
-        # three stamp probe jobs over the same stored tables
+        # score the served leg from the frames already loaded (and
+        # fenced) above, not through nb_score_from_model's second read
         return sp, sl, reuse(_nb_score_tokens(tok_arr, sp, sl))
 
     def _direct_chain():
@@ -2100,22 +1995,19 @@ def nb_model_consistency_check(
     (s_priors, s_lik, served), (f_priors, f_lik, direct) = (
         run_concurrently(_served_chain, _direct_chain)
     )
-    pm = s_priors.exceptAll(f_priors).unionAll(
-        f_priors.exceptAll(s_priors)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_prior_mismatch"))
-    lm = s_lik.exceptAll(f_lik).unionAll(
-        f_lik.exceptAll(s_lik)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_likelihood_mismatch"))
-    sm = served.exceptAll(direct).unionAll(
-        direct.exceptAll(served)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_score_mismatch"))
     nl = s_priors.agg(F.count(F.lit(1)).cast("long").alias("n_labels"))
     nr = s_lik.agg(F.count(F.lit(1)).cast("long").alias("n_model_rows"))
     return (
         nl.crossJoin(F.broadcast(nr))
-        .crossJoin(F.broadcast(pm))
-        .crossJoin(F.broadcast(lm))
-        .crossJoin(F.broadcast(sm))
+        .crossJoin(F.broadcast(
+            mismatch_count(s_priors, f_priors, "n_prior_mismatch")
+        ))
+        .crossJoin(F.broadcast(
+            mismatch_count(s_lik, f_lik, "n_likelihood_mismatch")
+        ))
+        .crossJoin(F.broadcast(
+            mismatch_count(served, direct, "n_score_mismatch")
+        ))
     )
 
 
@@ -2408,102 +2300,57 @@ def bpe_build_vocab(
 
     Two tables: ``{vocab_table}`` (merge_rank, left, right, merged —
     the learned merges in rank order) and ``{vocab_table}_meta``
-    (num_merges requested, n_merges learned, build_id). Both carry a
-    shared ``build_id`` stamp and the read path refuses mixed stamps
-    (the torn-rebuild fence every persisted index here uses). Rebuild =
-    explicit drop + recreate under the catalog's strict write
+    (num_merges requested, n_merges learned, max_vocab, build_id). Both
+    carry a shared ``build_id`` stamp and the read path refuses mixed
+    stamps (the torn-rebuild fence every persisted index here uses).
+    Rebuild = explicit drop + recreate under the catalog's strict write
     preconditions."""
-    import uuid
-
-    from pyspark.sql import types as T
-
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-    from hive_io_experimental_spark.schema import HiveTableSchema
-
     merges = bpe_train(
         df, num_merges=num_merges, text_col=text_col, max_vocab=max_vocab
     )
-    bid = uuid.uuid4().hex
-    stamped = merges.withColumn("build_id", F.lit(bid))
-    n_learned = merges.count()
     # max_vocab is part of the artifact's identity: the consistency
     # check retrains at the SAME dial (a custom cap above the default
     # would otherwise make the proof unrunnable for exactly the builds
     # that needed it)
-    meta = spark.createDataFrame(
-        [(int(num_merges), int(n_learned), int(max_vocab), bid)],
-        "num_merges int, n_merges long, max_vocab long, build_id string",
-    )
-    out = HiveOutput(spark, catalog)
-    for tbl, schema, frame in (
-        (
-            f"{vocab_table}_meta",
-            HiveTableSchema((
-                ("num_merges", T.IntegerType()),
-                ("n_merges", T.LongType()),
-                ("max_vocab", T.LongType()),
-                ("build_id", T.StringType()),
-            )),
-            meta,
+    write_set(spark, catalog, _BPE_VOCAB, vocab_table, {
+        "meta": (
+            (("num_merges", T.IntegerType()), ("n_merges", T.LongType()),
+             ("max_vocab", T.LongType())),
+            [(int(num_merges), int(merges.count()), int(max_vocab))],
         ),
-        (
-            vocab_table,
-            HiveTableSchema((
-                ("merge_rank", T.LongType()),
-                ("left", T.StringType()),
-                ("right", T.StringType()),
-                ("merged", T.StringType()),
-                ("build_id", T.StringType()),
-            )),
-            stamped,
+        "merges": (
+            (("merge_rank", T.LongType()), ("left", T.StringType()),
+             ("right", T.StringType()), ("merged", T.StringType())),
+            merges,
         ),
-    ):
-        if catalog.table_exists(tbl):
-            catalog.drop_table(tbl, delete_data=True)
-        catalog.create_table(tbl, schema)
-        out.write_table(WriteSpec(table=tbl), frame)
+    })
+
+
+def _bpe_vocab(spark, catalog, vocab_table: str, op: str) -> tuple:
+    """(meta row, merge list in learning order) of the fenced stored
+    vocab, from one concurrent read of both tables. The merges collect
+    is ``n_merges``-bounded by construction (the meta row pins it) —
+    vocab artifacts are KBs, not corpus-sized."""
+    _bid, p = read_set(spark, catalog, _BPE_VOCAB, vocab_table, op)
+    meta = p["meta"]
+    rows = sorted(p["merges"], key=lambda r: r["merge_rank"])
+    if len(rows) != int(meta["n_merges"]):
+        raise ValueError(
+            f"{op}: vocab {vocab_table} holds {len(rows)} merges but meta "
+            f"records {int(meta['n_merges'])} — the merge table was "
+            f"partially written. Re-run bpe_build_vocab."
+        )
+    return meta, [(r["left"], r["right"]) for r in rows]
 
 
 def bpe_load_vocab(spark, catalog, vocab_table: str) -> list[tuple[str, str]]:
     """The stored merge list in learning order, stamp-fenced: raises on a
-    missing/empty/pre-stamp table and on mixed meta-vs-merges build_id
-    stamps (torn rebuild), exactly like the ANN index read paths. The
-    collect is ``n_merges``-bounded by construction (the meta row pins
-    it) — vocab artifacts are KBs, not corpus-sized."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-    from hive_io_experimental_spark.operators.similarity import _index_stamp
-
-    inp = HiveInput(spark, catalog)
-    meta = inp.read_table(ScanSpec(table=f"{vocab_table}_meta")).first()
-    if meta is None:
-        raise ValueError(
-            f"bpe_load_vocab: empty meta table {vocab_table}_meta — run "
-            f"bpe_build_vocab first"
-        )
-    if int(meta["n_merges"]) == 0:
-        # a legitimately merge-free vocab (no adjacent pair ever repeats
-        # — e.g. all single-character words): the merges table is empty
-        # BY CONSTRUCTION, not torn; meta is the authority
-        return []
-    merges_df = inp.read_table(ScanSpec(table=vocab_table))
-    stamp = _index_stamp(
-        "bpe_load_vocab", vocab_table, "merges", merges_df,
-        rebuild="bpe_build_vocab",
-    )
-    if stamp != meta["build_id"]:
-        raise ValueError(
-            f"bpe_load_vocab: vocab {vocab_table} has mixed build_id "
-            f"stamps (meta {meta['build_id']!r} vs merges {stamp!r}) — "
-            f"a rebuild was torn mid-way. Re-run bpe_build_vocab."
-        )
-    rows = merges_df.orderBy("merge_rank").collect()
-    if len(rows) != int(meta["n_merges"]):
-        raise ValueError(
-            f"bpe_load_vocab: vocab {vocab_table} holds {len(rows)} "
-            f"merges but meta records {int(meta['n_merges'])} — the "
-            f"merge table was partially written. Re-run bpe_build_vocab."
-        )
-    return [(r["left"], r["right"]) for r in rows]
+    missing/empty/pre-stamp table, on mixed meta-vs-merges build_id
+    stamps (torn rebuild) and on a merge count that disagrees with meta
+    (partial write), exactly like the ANN index read paths. A vocab
+    whose meta records n_merges = 0 (no adjacent pair ever repeats) has
+    an empty merges table by construction, not a torn one."""
+    return _bpe_vocab(spark, catalog, vocab_table, "bpe_load_vocab")[1]
 
 
 def bpe_segment_from_vocab(
@@ -2557,18 +2404,16 @@ def bpe_vocab_consistency_check(
     ``num_merges`` dial and compares BOTH the merge lists (full-row
     anti-join both ways) and the segmentations. Returns (n_merges,
     n_docs, n_merge_mismatch, n_segment_mismatch) — mismatches must be
-    0."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
+    0.
 
-    meta = HiveInput(spark, catalog).read_table(
-        ScanSpec(table=f"{vocab_table}_meta")
-    ).first()
-    if meta is None:
-        raise ValueError(
-            f"bpe_vocab_consistency_check: empty meta table "
-            f"{vocab_table}_meta"
-        )
-    stored = bpe_load_vocab(spark, catalog, vocab_table)
+    ONE plan, each leg materialized once by reuse(). The corpus is
+    tokenized into ONE shared word stream feeding both segmentation legs
+    (the word split is merge-list-independent), and the two legs
+    materialize concurrently (reuse() blocks while AQE runs a leg's
+    stages)."""
+    meta, stored = _bpe_vocab(
+        spark, catalog, vocab_table, "bpe_vocab_consistency_check"
+    )
     # retrain at the BUILD's max_vocab dial; vocab artifacts persisted
     # before the dial was recorded fall back to the default (they were
     # necessarily built under it)
@@ -2588,24 +2433,6 @@ def bpe_vocab_consistency_check(
         ],
         "merge_rank long, left string, right string, merged string",
     )
-    from hive_io_experimental_spark.functions.reuse import (
-        reuse, run_concurrently,
-    )
-
-    # ONE plan, each leg materialized once (r14 optimization round):
-    # reuse() + aggregate-branch counts — the eager .count() calls ran
-    # the corpus-sized segmentation pass 5x (served 3x, direct 2x)
-    # where 2 passes suffice (guide §1.2 / §5). Two further cuts (r15):
-    # the corpus is tokenized into ONE shared word stream feeding both
-    # segmentation legs (the word split is merge-list-independent;
-    # previously each leg re-tokenized the corpus), and the two legs
-    # materialize concurrently — reuse() blocks while AQE runs a leg's
-    # stages (guide §2.6). The served leg applies the `stored` merges
-    # already loaded (and stamp-fenced) above; bpe_segment_from_vocab
-    # would re-run the three vocab-load probe jobs.
-    mm = stored_df.exceptAll(fresh_df).unionAll(
-        fresh_df.exceptAll(stored_df)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_merge_mismatch"))
     words = reuse(_bpe_words(df, text_col, id_col))
 
     def _direct():
@@ -2623,15 +2450,16 @@ def bpe_vocab_consistency_check(
         lambda: reuse(_segment_words_with(words, stored)),
         _direct,
     )
-    sm = served.exceptAll(direct).unionAll(
-        direct.exceptAll(served)
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_segment_mismatch"))
     nm = spark.createDataFrame([(len(stored),)], "n_merges long")
     nd = served.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     return (
         nm.crossJoin(nd)
-        .crossJoin(F.broadcast(mm))
-        .crossJoin(F.broadcast(sm))
+        .crossJoin(F.broadcast(
+            mismatch_count(stored_df, fresh_df, "n_merge_mismatch")
+        ))
+        .crossJoin(F.broadcast(
+            mismatch_count(served, direct, "n_segment_mismatch")
+        ))
     )
 
 

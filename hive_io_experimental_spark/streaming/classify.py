@@ -19,10 +19,10 @@ tables under a new build_id — there is no append that leaves the
 planned snapshot's files intact — so there is no serve-through case at
 all: ANY model change mid-stream (incremental update included) stops
 the stream loudly, and a restart serves the new version. The pre+post
-per-batch probes are `_nb_load_model_full`'s fences (empty / pre-stamp
-/ mixed-stamp / torn-rebuild) plus the planned-build pin; the post-sink
-probe names the epoch whose already-sunk output is suspect when a
-replacement lands mid-batch (the check-then-use lesson, r12 ADVICE).
+per-batch probes are the model set's fences (empty / pre-stamp /
+mixed-stamp / torn-rebuild, operators/artifacts.py) plus the
+planned-build pin; the post-sink probe names the epoch whose
+already-sunk output is suspect when a replacement lands mid-batch.
 
 Per micro-batch cost: |batch| token fan-out x label broadcast, one
 vocabulary equi-join against the pinned likelihoods, a batch-local
@@ -35,11 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_io_experimental_spark.operators.text import (
+    _NB_MODEL,
     _nb_load_model_full,
     nb_score,
 )
 from hive_io_experimental_spark.streaming.similarity import (
-    _serve_adc_stream,
+    _serve_checked_stream,
 )
 
 
@@ -57,50 +58,26 @@ def serve_nb_score_stream(
     .start(). Output rows are (doc_id, label, total_bits, n_tokens),
     row-identical to nb_score_from_model over the same closed input.
 
-    The stored model is probed at plan time (torn-rebuild refusal, the
-    batch path's fences) and re-probed around every micro-batch pinned
-    to the PLANNED build_id: a model updated or rebuilt mid-stream
-    fails the streaming query loudly — an NB update replaces the model
-    tables outright, so unlike an index APPEND there is nothing
-    consistent left to serve through. Restart to serve the new model
-    version."""
-
-    def _validate(expect_build_id=None):
-        meta, priors, likelihoods = _nb_load_model_full(
-            spark, catalog, model_table, "serve_nb_score_stream"
-        )
-        if (
-            expect_build_id is not None
-            and meta["build_id"] != expect_build_id
-        ):
-            raise ValueError(
-                f"serve_nb_score_stream: model {model_table} was "
-                f"UPDATED or REBUILT mid-stream (planned against build "
-                f"{expect_build_id!r}, now {meta['build_id']!r}) — an "
-                f"NB update replaces the model tables, so the stream's "
-                f"pinned frames no longer exist. Restart the stream to "
-                f"serve the new model version."
-            )
-        return meta["build_id"]
-
-    planned_build = _validate()
-    # pinned snapshot reads: the frames every batch scores against,
-    # resolved once at plan time under the build the probe just fenced
-    _meta, priors_full, lik_full = _nb_load_model_full(
-        spark, catalog, model_table, "serve_nb_score_stream"
+    The stored model is fenced once at plan time (torn-rebuild refusal,
+    the batch path's fences), which also pins the frames every batch
+    scores against, and re-fenced around every micro-batch pinned to
+    the PLANNED build_id: a model updated or rebuilt mid-stream fails
+    the streaming query loudly — an NB update replaces the model tables
+    outright, so unlike an index APPEND there is nothing consistent
+    left to serve through. Restart to serve the new model version."""
+    op = "serve_nb_score_stream"
+    meta, priors, likelihoods = _nb_load_model_full(
+        spark, catalog, model_table, op
     )
-    priors = priors_full.select(
-        "label", "n_docs", "prior_bits", "unseen_bits"
-    )
-    likelihoods = lik_full.select("label", "token", "bits")
-
-    def _rank(batch_df: DataFrame) -> DataFrame:
-        return nb_score(batch_df, priors, likelihoods, text_col, id_col)
-
-    return _serve_adc_stream(
+    priors = priors.select("label", "n_docs", "prior_bits", "unseen_bits")
+    likelihoods = likelihoods.select("label", "token", "bits")
+    return _serve_checked_stream(
+        spark, catalog, _NB_MODEL, model_table, meta["build_id"],
         doc_stream.select(F.col(id_col), F.col(text_col)),
-        planned_build, _validate, _rank, sink_fn,
-        op="serve_nb_score_stream",
+        lambda batch_df: nb_score(
+            batch_df, priors, likelihoods, text_col, id_col
+        ),
+        sink_fn, op,
         batch_hint="nb_score_from_model",
         taint_hint="may mix model versions",
     )

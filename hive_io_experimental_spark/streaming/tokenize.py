@@ -24,11 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_io_experimental_spark.operators.text import (
+    _BPE_VOCAB,
+    _bpe_vocab,
     _segment_with,
-    bpe_load_vocab,
 )
 from hive_io_experimental_spark.streaming.similarity import (
-    _serve_adc_stream,
+    _serve_checked_stream,
 )
 
 
@@ -47,63 +48,21 @@ def serve_bpe_segment_stream(
     — the batch helper runs unchanged per micro-batch on the merge list
     collected at plan time (same literal-vs-Arrow dispatch).
 
-    The stored vocab is stamp-fenced at plan time (bpe_load_vocab's
-    empty/pre-stamp/mixed-stamp/partial-write refusals) and re-probed
-    around every micro-batch pinned to the PLANNED build_id: a vocab
-    rebuilt mid-stream stops the stream loudly — not because the output
-    would be wrong (the plan owns its merges), but because silently
-    serving a superseded tokenizer version mixes tokenizations across
-    the corpus. Restart to serve the new vocab."""
-    from hive_io_experimental_spark.input import HiveInput, ScanSpec
-    from hive_io_experimental_spark.operators.similarity import _index_stamp
-
-    def _validate(expect_build_id=None):
-        inp = HiveInput(spark, catalog)
-        meta = inp.read_table(
-            ScanSpec(table=f"{vocab_table}_meta")
-        ).first()
-        if meta is None:
-            raise ValueError(
-                f"serve_bpe_segment_stream: empty meta table "
-                f"{vocab_table}_meta — run bpe_build_vocab first"
-            )
-        if int(meta["n_merges"]) > 0:
-            stamp = _index_stamp(
-                "serve_bpe_segment_stream", vocab_table, "merges",
-                inp.read_table(ScanSpec(table=vocab_table)),
-                rebuild="bpe_build_vocab",
-            )
-            if stamp != meta["build_id"]:
-                raise ValueError(
-                    f"serve_bpe_segment_stream: vocab {vocab_table} has "
-                    f"mixed build_id stamps (meta {meta['build_id']!r} "
-                    f"vs merges {stamp!r}) — a rebuild was torn mid-way. "
-                    f"Re-run bpe_build_vocab."
-                )
-        if (
-            expect_build_id is not None
-            and meta["build_id"] != expect_build_id
-        ):
-            raise ValueError(
-                f"serve_bpe_segment_stream: vocab {vocab_table} was "
-                f"REBUILT mid-stream (planned against build "
-                f"{expect_build_id!r}, now {meta['build_id']!r}) — "
-                f"serving on would silently mix tokenizer versions "
-                f"across the corpus. Restart the stream to serve the "
-                f"new vocab."
-            )
-        return meta["build_id"]
-
-    planned_build = _validate()
-    merges = bpe_load_vocab(spark, catalog, vocab_table)
-
-    def _rank(batch_df: DataFrame) -> DataFrame:
-        return _segment_with(batch_df, merges, text_col, id_col)
-
-    return _serve_adc_stream(
+    The stored vocab is fenced at plan time (bpe_load_vocab's
+    empty/pre-stamp/mixed-stamp/partial-write refusals, in the same read
+    that collects the merges) and re-fenced around every micro-batch
+    pinned to the PLANNED build_id: a vocab rebuilt mid-stream stops the
+    stream loudly — not because the output would be wrong (the plan
+    owns its merges), but because silently serving a superseded
+    tokenizer version mixes tokenizations across the corpus. Restart to
+    serve the new vocab."""
+    op = "serve_bpe_segment_stream"
+    meta, merges = _bpe_vocab(spark, catalog, vocab_table, op)
+    return _serve_checked_stream(
+        spark, catalog, _BPE_VOCAB, vocab_table, meta["build_id"],
         doc_stream.select(F.col(id_col), F.col(text_col)),
-        planned_build, _validate, _rank, sink_fn,
-        op="serve_bpe_segment_stream",
+        lambda batch_df: _segment_with(batch_df, merges, text_col, id_col),
+        sink_fn, op,
         batch_hint="bpe_segment_from_vocab",
         taint_hint="may mix tokenizer versions",
     )

@@ -2907,6 +2907,11 @@ def test_ivf_pq_query_index_refuses_torn_rebuild(spark, sf_dir, warehouse):
         similarity.ivf_pq_query_index(
             spark, cat, "default.emb_ivfpq_t", queries
         )
+    # appending would entrench the tear
+    with pytest.raises(ValueError, match="mixed build_id"):
+        similarity.ivf_pq_append_to_index(
+            spark, cat, "default.emb_ivfpq_t", queries
+        )
 
 
 @pytest.fixture(scope="module")
@@ -3451,6 +3456,10 @@ def test_lsh_index_refuses_torn_rebuild(spark, sf_dir, warehouse):
     with pytest.raises(ValueError, match="mixed build_id"):
         similarity.lsh_query_index(
             spark, cat, "default.emb_lsh3", emb, queries
+        )
+    with pytest.raises(ValueError, match="mixed build_id"):
+        similarity.lsh_append_to_index(
+            spark, cat, "default.emb_lsh3", queries
         )
 
 

@@ -1242,72 +1242,126 @@ def test_decimal_mean_half_boundary_is_half_up(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_lsh_serving_refuses_empty_bucket_table(spark, sf_dir, tmp_path):
-    """A rebuild torn between create and write leaves an EMPTY bucket
-    table; serving must raise, not return zero candidates silently."""
-    from pyspark.sql import types as T
+_TIERS = ("lsh", "pq", "ivf_pq", "nb", "bpe")
 
+
+def _smallest_artifact(spark, cat, sf_dir, tier, name):
+    """Build ``tier``'s persisted artifact as ``name`` at its smallest
+    size and return a thunk calling the tier's read verb. Every tier
+    keeps its corpus-sized table under the bare name."""
+    from hive_io_experimental_spark.operators import text as T
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5)
+    docs = spark.createDataFrame(
+        [(0, "alpha beta alpha beta", "a"), (1, "gamma delta", "b")],
+        "doc_id long, text string, lang string",
+    )
+    if tier == "lsh":
+        similarity.lsh_build_index(spark, cat, name, emb, num_planes=4)
+        return lambda: similarity.lsh_query_index(spark, cat, name, emb, q)
+    if tier == "pq":
+        similarity.pq_build_index(
+            spark, cat, name, emb, centroid_stride=50, max_codes=128
+        )
+        return lambda: similarity.pq_query_index(spark, cat, name, q)
+    if tier == "ivf_pq":
+        similarity.ivf_pq_build_index(
+            spark, cat, name, emb, centroid_stride=50, num_subspaces=4
+        )
+        return lambda: similarity.ivf_pq_query_index(
+            spark, cat, name, q, num_subspaces=4
+        )
+    if tier == "nb":
+        T.nb_build_model(spark, cat, name, docs, label_col="lang")
+        return lambda: T.nb_score_from_model(spark, cat, name, docs)
+    T.bpe_build_vocab(spark, cat, name, docs, num_merges=3)
+    return lambda: T.bpe_load_vocab(spark, cat, name)
+
+
+@pytest.mark.parametrize("tier", _TIERS)
+def test_lsh_serving_refuses_empty_bucket_table(spark, sf_dir, tmp_path,
+                                                tier):
+    """A rebuild torn between create and write leaves an EMPTY
+    corpus-sized table (LSH buckets, PQ/IVF-PQ codes, NB likelihoods,
+    BPE merges); every tier's read verb must raise, not serve zero
+    candidates silently."""
     from hive_io_experimental_spark.catalog import Catalog
-    from hive_io_experimental_spark.operators import similarity
-    from hive_io_experimental_spark.schema import HiveTableSchema
 
     cat = Catalog(str(tmp_path / "wh"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    similarity.lsh_build_index(spark, cat, "default.torn", emb,
-                               num_planes=4)
-    # simulate the torn rebuild: bucket table recreated, never written
+    read = _smallest_artifact(spark, cat, sf_dir, tier, "default.torn")
+    # simulate the torn rebuild: the table recreated, never written
+    schema = cat.get_schema("default.torn")
+    versioned = cat.is_versioned("default.torn")
     cat.drop_table("default.torn", delete_data=True)
-    cat.create_table(
-        "default.torn",
-        HiveTableSchema((
-            ("id", T.LongType()),
-            ("bucket", T.LongType()),
-            ("build_id", T.StringType()),
-        )),
-        versioned=True,
-    )
-    q = emb.filter(F.col("vec_id") < 5)
+    cat.create_table("default.torn", schema, versioned=versioned)
     with pytest.raises(ValueError, match="EMPTY"):
-        similarity.lsh_query_index(spark, cat, "default.torn", emb, q)
+        read()
 
 
-def test_ivf_pq_serving_refuses_unstamped_codes_table(spark, sf_dir, tmp_path):
-    """An index persisted before the build_id stamp existed (no build_id
-    column) must get the rebuild-to-migrate error, not an opaque
+@pytest.mark.parametrize("tier", _TIERS)
+def test_ivf_pq_serving_refuses_unstamped_codes_table(spark, sf_dir,
+                                                      tmp_path, tier):
+    """An artifact persisted before the build_id stamp existed (no
+    build_id column on its corpus-sized table) must get the
+    rebuild-to-migrate error on every tier, not an opaque
     unresolved-column AnalysisException."""
-    from pyspark.sql import types as T
-
     from hive_io_experimental_spark.catalog import Catalog
-    from hive_io_experimental_spark.operators import similarity
+    from hive_io_experimental_spark.input import HiveInput, ScanSpec
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
     from hive_io_experimental_spark.schema import HiveTableSchema
 
     cat = Catalog(str(tmp_path / "wh"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    similarity.ivf_pq_build_index(
-        spark, cat, "default.tpq", emb, centroid_stride=50,
-        num_subspaces=4,
-    )
-    # simulate a pre-stamp index: codes table without the build_id column
+    read = _smallest_artifact(spark, cat, sf_dir, tier, "default.tpq")
+    # simulate a pre-stamp artifact: the same rows without build_id
+    rows = HiveInput(spark, cat).read_table(
+        ScanSpec(table="default.tpq")
+    ).drop("build_id").localCheckpoint()
+    schema = HiveTableSchema(tuple(
+        f for f in cat.get_schema("default.tpq").data_fields
+        if f[0] != "build_id"
+    ))
     cat.drop_table("default.tpq", delete_data=True)
-    cat.create_table(
-        "default.tpq",
-        HiveTableSchema((
-            ("id", T.LongType()),
-            ("codes", T.ArrayType(T.IntegerType())),
-        )),
-    )
-    HiveOutput(spark, cat).write_table(
-        WriteSpec(table="default.tpq"),
-        spark.createDataFrame(
-            [(0, [1, 2, 3, 4])], "id long, codes array<int>"
-        ),
-    )
-    q = emb.filter(F.col("vec_id") < 5)
+    cat.create_table("default.tpq", schema)
+    HiveOutput(spark, cat).write_table(WriteSpec(table="default.tpq"), rows)
     with pytest.raises(ValueError, match="no build_id column"):
-        similarity.ivf_pq_query_index(
-            spark, cat, "default.tpq", emb, q, num_subspaces=4
+        read()
+
+
+@pytest.mark.parametrize("tier", ("lsh", "nb", "bpe"))
+def test_torn_first_build_reports_the_meta_table(spark, tmp_path, tier):
+    """A build torn after creating its tables and before writing any
+    leaves every table empty. The meta table is the authority, so the
+    read verb must name it ("empty meta table ... run the build
+    first"), not a table meta vouches for."""
+    from pyspark.sql import types as T_
+
+    from hive_io_experimental_spark.catalog import Catalog
+    from hive_io_experimental_spark.operators import text as T
+    from hive_io_experimental_spark.schema import HiveTableSchema
+
+    cat = Catalog(str(tmp_path / "wh"))
+    artifact, read = {
+        "lsh": (similarity._LSH_INDEX, lambda f: similarity.lsh_query_index(
+            spark, cat, "default.t0", f, f)),
+        "nb": (T._NB_MODEL, lambda f: T.nb_score_from_model(
+            spark, cat, "default.t0", f)),
+        "bpe": (T._BPE_VOCAB, lambda f: T.bpe_load_vocab(
+            spark, cat, "default.t0")),
+    }[tier]
+    for part in artifact.parts:
+        cat.create_table(
+            f"default.t0{part.suffix}",
+            HiveTableSchema((
+                ("x", T_.LongType()), ("build_id", T_.StringType()),
+            )),
         )
+    frame = spark.createDataFrame(
+        [(0, [1.0, 0.0], "a")], "vec_id long, embedding array<double>, "
+        "text string",
+    )
+    with pytest.raises(ValueError, match="empty meta table default.t0_meta"):
+        read(frame)
 
 
 def test_mmr_raises_loudly_on_zero_norm_vectors(spark):
@@ -1519,6 +1573,11 @@ def test_nb_model_refuses_torn_rebuild(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="mixed build_id"):
         T.nb_score_from_model(spark, cat, "default.nb_torn", docs)
+    # folding a batch into a torn model would entrench the tear
+    with pytest.raises(ValueError, match="mixed build_id"):
+        T.nb_update_model(
+            spark, cat, "default.nb_torn", docs, label_col="lang"
+        )
 
 
 def test_nb_model_refuses_zero_meta_with_stale_likelihoods(spark, tmp_path):
