@@ -2031,6 +2031,59 @@ def _pq_encode_pandas(
     return u.mapInPandas(encode, f"id {sid_type}, codes array<long>")
 
 
+def _ivf_pq_kernel(
+    cent_rows: list, cb_rows: list, num_subspaces: int, dsub: int
+):
+    """The IVF-PQ encode/assign math as one pure-NumPy closure,
+    ``kernel(M, norms) -> (cids, codes)`` over raw vectors M (rows x d
+    doubles) and their JVM l2_norm values: the coarse nearest-centroid
+    assignment (_assign_pandas keep=1 math, cosine over raw vectors)
+    and the PQ codes (_pq_encode_pandas math, squared-L2 over the
+    unit-normalized rows). Rows with a zero (or NULL -> nan) norm keep
+    their assignment but carry codes=None — mirroring _unit_vectors
+    dropping them from the encode.
+
+    The closure references only NumPy and the captured geometry, so it
+    pickles by value into Arrow workers (which cannot import this
+    package) and runs unchanged on the driver: the build, repair,
+    ivf_pq_topk and both ivf_pq_append_to_index branches share it."""
+    import numpy as np
+
+    cids, C, c_norms = _centroid_matrix(cent_rows)
+    mats = _codebook_matrices(cb_rows, num_subspaces)
+    biases = [0.5 * (Cb * Cb).sum(axis=1) for Cb in mats]
+    # bounds the rows x centroids cosine matrix per chunk
+    chunk_rows = max(1, 2_000_000 // max(len(cids), 1))
+
+    def kernel(M, raw_norms):
+        out_cids = np.empty(len(M), dtype=np.int64)
+        codes_col: list = [None] * len(M)
+        for lo in range(0, len(M), chunk_rows):
+            part = M[lo:lo + chunk_rows]
+            nrm = raw_norms[lo:lo + chunk_rows]
+            m_norms = nrm.copy()
+            m_norms[m_norms == 0] = np.inf
+            cos = (part @ C.T) / (m_norms[:, None] * c_norms[None, :])
+            # np.argmax returns the FIRST max: ties to the lowest cid
+            # (C is cid-sorted) — _assign_pandas keep=1 rule
+            out_cids[lo:lo + len(part)] = cids[np.argmax(cos, axis=1)]
+            nz = nrm > 0  # NULL norm -> nan -> False, like
+            # _unit_vectors' _nrm > 0 filter
+            if not nz.any():
+                continue
+            U = part[nz] / nrm[nz][:, None]
+            codes = np.empty((int(nz.sum()), num_subspaces), dtype=np.int64)
+            for j in range(num_subspaces):
+                score = U[:, j * dsub:(j + 1) * dsub] @ mats[j].T - biases[j]
+                # FIRST max: ties to the lowest code
+                codes[:, j] = score.argmax(axis=1)
+            for i, row in zip(np.flatnonzero(nz), codes):
+                codes_col[lo + i] = row
+        return out_cids, codes_col
+
+    return kernel
+
+
 def _ivf_pq_encode_assign_pandas(
     c: DataFrame,
     cent_rows: list,
@@ -2039,66 +2092,36 @@ def _ivf_pq_encode_assign_pandas(
     dsub: int,
 ) -> DataFrame:
     """ONE Arrow pass over the raw vectors producing BOTH the IVF-PQ
-    index halves: (id, cid, codes) — the coarse nearest-centroid
-    assignment (_assign_pandas keep=1 math, cosine over raw vectors)
-    and the PQ codes (_pq_encode_pandas math, squared-L2 over the
-    unit-normalized rows). ivf_pq_build_index / ivf_pq_append_to_index
-    previously ran the two as separate passes, i.e. two full reads of
-    the raw embedding column — at 100 TB the dominant build cost (r14
-    optimization round, guide §1.2: remove unnecessary passes).
+    index halves: (id, cid, codes), computed by _ivf_pq_kernel.
+    ivf_pq_build_index / ivf_pq_append_to_index previously ran the
+    assignment and the encode as separate passes, i.e. two full reads
+    of the raw embedding column — at 100 TB the dominant build cost
+    (r14 optimization round, guide §1.2: remove unnecessary passes).
 
     Bit-identity with the two single-purpose functions: the centroid
     cosine and the per-subspace scores are the same BLAS expressions on
     the same doubles (IEEE division x/nrm matches _unit_vectors' JVM
     per-element division exactly), argmax tie rules identical, and both
     are row-independent so batching/partitioning differences cannot
-    change any row's result. Rows with a zero (or NULL) norm keep their
-    assignment but carry codes=NULL — mirroring _unit_vectors dropping
-    them from the encode. ``c`` must be (id, _v array<double>, _nrm);
-    spread it first (single-row-group inputs otherwise serialize the
-    whole pass into one task)."""
+    change any row's result. ``c`` must be (id, _v array<double>,
+    _nrm); spread it first (single-row-group inputs otherwise serialize
+    the whole pass into one task)."""
     import numpy as np
 
-    cids, C, c_norms = _centroid_matrix(cent_rows)
-    mats = _codebook_matrices(cb_rows, num_subspaces)
-    biases = [0.5 * (Cb * Cb).sum(axis=1) for Cb in mats]
-    chunk_rows = max(1, 2_000_000 // max(len(cids), 1))
+    kernel = _ivf_pq_kernel(cent_rows, cb_rows, num_subspaces, dsub)
 
     def run(batches):
         for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                part = pdf.iloc[lo:lo + chunk_rows]
-                if len(part) == 0:
-                    continue
-                M = np.array(list(part["_v"]), dtype=np.float64)
-                raw_norms = part["_nrm"].to_numpy(dtype=np.float64)
-                m_norms = raw_norms.copy()
-                m_norms[m_norms == 0] = np.inf
-                cos = (M @ C.T) / (m_norms[:, None] * c_norms[None, :])
-                # np.argmax returns the FIRST max: ties to the lowest
-                # cid (C is cid-sorted) — _assign_pandas keep=1 rule
-                out = part[["id"]].copy()
-                out["cid"] = cids[np.argmax(cos, axis=1)]
-                nz = raw_norms > 0  # NULL norm -> nan -> False, like
-                # _unit_vectors' _nrm > 0 filter
-                codes_col: list = [None] * len(part)
-                if nz.any():
-                    U = M[nz] / raw_norms[nz][:, None]
-                    codes = np.empty(
-                        (int(nz.sum()), num_subspaces), dtype=np.int64
-                    )
-                    for j in range(num_subspaces):
-                        sub = U[:, j * dsub:(j + 1) * dsub]
-                        score = sub @ mats[j].T - biases[j]
-                        # FIRST max: ties to the lowest code
-                        codes[:, j] = score.argmax(axis=1)
-                    k = 0
-                    for i, flag in enumerate(nz):
-                        if flag:
-                            codes_col[i] = codes[k]
-                            k += 1
-                out["codes"] = codes_col
-                yield out
+            if len(pdf) == 0:
+                continue
+            cid, codes = kernel(
+                np.array(list(pdf["_v"]), dtype=np.float64),
+                pdf["_nrm"].to_numpy(dtype=np.float64),
+            )
+            out = pdf[["id"]].copy()
+            out["cid"] = cid
+            out["codes"] = codes
+            yield out
 
     sid_type = dict(c.dtypes)["id"]
     return c.mapInPandas(
@@ -2414,10 +2437,6 @@ def ivf_pq_topk(
         # reads of the embedding column, plus two centroid collects and
         # a query-side dimension probe job). Bit-identity with the
         # two-pass shape is the r14 argument, oracle-pinned.
-        from hive_io_experimental_spark.functions.reuse import (
-            reuse, run_concurrently,
-        )
-
         _require_small_query_side(
             queries.select(F.col(id_col)), "IVF top-k (broadcast probes)"
         )
@@ -2431,12 +2450,13 @@ def ivf_pq_topk(
         c = spread(corpus).select(
             F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
         ).withColumn("_nrm", l2_norm(F.col("_v")))
-        fused = reuse(_ivf_pq_encode_assign_pandas(
+        # the fused rows already carry (cid, codes) per id, so the
+        # scored side is one filter of the single pass — no reuse() and
+        # no self-join back on id
+        inv = _ivf_pq_encode_assign_pandas(
             c, cent_rows, cb_rows, num_subspaces, dsub
-        ))
-        inverted = fused.select("cid", F.col("id").alias("neighbor_id"))
-        codes = fused.filter(F.col("codes").isNotNull()).select(
-            "id", "codes"
+        ).filter(F.col("codes").isNotNull()).select(
+            "cid", F.col("id").alias("neighbor_id"), "codes"
         )
         q = queries.select(
             F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
@@ -2465,9 +2485,9 @@ def ivf_pq_topk(
             )
         dsub = probe["d"] // num_subspaces
         luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
-    inv = inverted.select("cid", "neighbor_id").join(
-        codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
-    )
+        inv = inverted.select("cid", "neighbor_id").join(
+            codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
+        )
     prb = probes.select("cid", "query_id").join(luts, "query_id")
     scored = (
         inv.join(F.broadcast(prb), "cid")
@@ -2720,13 +2740,8 @@ def _check_append_batch(
     id_col: str,
 ) -> bool:
     """One-job batch-hygiene fence shared by the index appends; returns
-    False for an empty batch (callers no-op). A batch holding the SAME
-    id twice would commit duplicate index rows (the anti-join dedups
-    only against STORED ids — idempotency is cross-batch, not
-    within-batch), and a NULL or wrong-dimension embedding would be
-    silently dropped by the unit-vector stage or mis-sliced by the
-    encoder. Both are upstream delivery bugs; both raise here naming
-    the row counts (the random_projection fail-loud discipline)."""
+    False for an empty batch (callers no-op). The counts feed
+    _batch_hygiene, which raises on a dirty batch."""
     row = new_vectors.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct(F.col(id_col)).alias("n_ids"),
@@ -2735,28 +2750,47 @@ def _check_append_batch(
             F.when(F.size(F.col(vec_col)) == expect_dim, 1)
         ).alias("n_good"),
     ).first()
-    if row is None or row["n"] == 0:
+    return _batch_hygiene(
+        op, id_col, expect_dim, row["n"], row["n_ids"], row["n_null_ids"],
+        row["n_good"],
+    )
+
+
+def _batch_hygiene(
+    op: str, id_col: str, expect_dim: int, n: int, n_ids: int,
+    n_null_ids: int, n_good: int,
+) -> bool:
+    """The index appends' batch-hygiene verdict from the batch's counts
+    (rows, distinct non-NULL ids, NULL ids, rows whose embedding has
+    ``expect_dim`` elements); False for an empty batch. A batch holding
+    the SAME id twice would commit duplicate index rows (the anti-join
+    dedups only against STORED ids — idempotency is cross-batch, not
+    within-batch), and a NULL or wrong-dimension embedding would be
+    silently dropped by the unit-vector stage or mis-sliced by the
+    encoder. Both are upstream delivery bugs; both raise here naming
+    the row counts (the random_projection fail-loud discipline)."""
+    if n == 0:
         return False
-    # NULL ids first, with their own message: countDistinct skips NULLs,
-    # so a NULL-id batch would otherwise reach the duplicate branch with
-    # a wrong diagnosis
-    if row["n_null_ids"] > 0:
+    # NULL ids first, with their own message: distinct counts skip
+    # NULLs, so a NULL-id batch would otherwise reach the duplicate
+    # branch with a wrong diagnosis
+    if n_null_ids > 0:
         raise ValueError(
-            f"{op}: {row['n_null_ids']} of {row['n']} batch rows have a "
+            f"{op}: {n_null_ids} of {n} batch rows have a "
             f"NULL {id_col} — index rows need a stable id for the "
             f"anti-join idempotency fence. Fix the batch's id column "
             f"first."
         )
-    if row["n_ids"] < row["n"]:
+    if n_ids < n:
         raise ValueError(
-            f"{op}: the batch holds {row['n'] - row['n_ids']} duplicate "
+            f"{op}: the batch holds {n - n_ids} duplicate "
             f"{id_col} rows — within-batch duplicates would commit twice "
             f"(the anti-join dedups only against stored ids). Dedup the "
             f"batch first."
         )
-    if row["n_good"] < row["n"]:
+    if n_good < n:
         raise ValueError(
-            f"{op}: {row['n'] - row['n_good']} of {row['n']} batch rows "
+            f"{op}: {n - n_good} of {n} batch rows "
             f"have a NULL embedding or length != {expect_dim} — they "
             f"would be silently dropped or mis-encoded. Fix or filter "
             f"the batch first."
@@ -3239,34 +3273,67 @@ def ivf_pq_append_to_index(
     same as the artifact appends). Lists append first, codes second;
     returns the committed snapshot version of the codes table (or the
     current one on a no-op).
+
+    A batch of at most _MAX_BROADCAST_QUERIES rows (the small-side cap)
+    appends on the driver: one bounded collect of the batch, overlapped
+    with the fence probes, is also the hygiene check; the kernel the
+    Arrow pass runs (_ivf_pq_kernel) encodes and assigns it in NumPy;
+    one semi-join job finds the ids each stored table already holds;
+    and each fresh half is written from a local frame as one file — no
+    Python worker and no checkpoint. A larger batch discards that
+    collect and takes the distributed path (spread Arrow pass, one
+    checkpointed anti-join per table). Both commit the same rows.
     """
     from hive_io_experimental_spark.output import HiveOutput, WriteSpec
 
     op = "ivf_pq_append_to_index"
-    bid, p = read_set(spark, catalog, _IVF_PQ_INDEX, index_table, op)
-    m, dsub = _check_stored_codebooks(op, index_table, p["codebooks"])
-    if not _check_append_batch(op, new_vectors, m * dsub, vec_col, id_col):
-        return catalog.current_version(index_table)  # empty batch: no-op
-    # ONE batch pass yields both halves; spread() first, or a
-    # single-file batch runs the whole pass in one task
-    c = spread(new_vectors).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
-    ).withColumn("_nrm", l2_norm(F.col("_v")))
-    fused = reuse(_ivf_pq_encode_assign_pandas(
-        c, p["centroids"], p["codebooks"], m, dsub
-    ))
-    # per-table anti-joins (not one shared id set): after a torn append
-    # the two tables disagree on which ids they hold, and each half
-    # must complete on its own on retry. The two checkpoint+count chains
-    # run concurrently; the APPENDS stay strictly ordered (lists first,
-    # codes second — the documented torn-append direction)
-    (fresh_lists, n_lists), (fresh_codes, n_codes) = run_concurrently(
-        lambda: append_fresh(fused.select("cid", "id"), p["lists"], bid),
-        lambda: append_fresh(
-            fused.filter(F.col("codes").isNotNull()).select("id", "codes"),
-            p["codes"], bid,
-        ),
+
+    def vectors(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
+        ).withColumn("_nrm", l2_norm(F.col("_v")))
+
+    batch = vectors(new_vectors)
+    # the bounded batch collect overlaps the fence probes; hygiene is
+    # judged after them, so a fence error still wins
+    bid, p = read_set(
+        spark, catalog, _IVF_PQ_INDEX, index_table, op,
+        first={"batch": lambda: batch.limit(
+            _MAX_BROADCAST_QUERIES + 1
+        ).toArrow()},
     )
+    m, dsub = _check_stored_codebooks(op, index_table, p["codebooks"])
+    if p["batch"].num_rows <= _MAX_BROADCAST_QUERIES:
+        halves = _ivf_pq_fresh_local(
+            spark, op, bid, p, batch.schema["id"].dataType, m, dsub, id_col
+        )
+    elif _check_append_batch(op, new_vectors, m * dsub, vec_col, id_col):
+        # ONE batch pass yields both halves; spread() first, or a
+        # single-file batch runs the whole pass in one task
+        fused = reuse(_ivf_pq_encode_assign_pandas(
+            vectors(spread(new_vectors)), p["centroids"], p["codebooks"],
+            m, dsub,
+        ))
+        # per-table anti-joins (not one shared id set): after a torn
+        # append the two tables disagree on which ids they hold, and
+        # each half must complete on its own on retry. The two
+        # checkpoint+count chains run concurrently
+        halves = run_concurrently(
+            lambda: append_fresh(fused.select("cid", "id"), p["lists"], bid),
+            lambda: append_fresh(
+                fused.filter(F.col("codes").isNotNull()).select(
+                    "id", "codes"
+                ),
+                p["codes"], bid,
+            ),
+        )
+    else:
+        halves = None
+    if halves is None:
+        return catalog.current_version(index_table)  # empty batch: no-op
+    (fresh_lists, n_lists), (fresh_codes, n_codes) = halves
+    # the APPENDS stay strictly ordered (lists first, codes second — the
+    # documented torn-append direction)
     out = HiveOutput(spark, catalog)
     if n_lists > 0:
         out.append_table(
@@ -3276,6 +3343,83 @@ def ivf_pq_append_to_index(
         return catalog.current_version(index_table)
     return out.append_table(WriteSpec(table=index_table), fresh_codes,
                             note=op)
+
+
+def _ivf_pq_fresh_local(
+    spark, op: str, bid: str, p: dict, id_type, m: int, dsub: int,
+    id_col: str,
+):
+    """ivf_pq_append_to_index's driver branch over the collected batch
+    ``p["batch"]``, an Arrow table of (id, _v, _nrm): ((fresh lists,
+    n), (fresh codes, n)), or None for an empty batch.
+
+    The table gives _batch_hygiene the counts _check_append_batch
+    aggregates, and gives _ivf_pq_kernel the doubles the Arrow pass
+    would see (_v is cast to double by the JVM and _nrm is its
+    l2_norm). One semi-join job finds which batch ids each stored table
+    already holds, so each half stays idempotent on its own (the torn-
+    append retry). The fresh halves are local Arrow frames of one
+    partition: they do not scan the table they append to, so they need
+    no checkpoint, and each is written as one file."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tab = p["batch"]
+    dim = m * dsub
+    ids = tab.column("id").to_pylist()
+    known = [i for i in ids if i is not None]
+    lengths = pc.list_value_length(tab.column("_v")).fill_null(-1)
+    if not _batch_hygiene(
+        op, id_col, dim, len(ids), len(set(known)), len(ids) - len(known),
+        pc.sum(pc.equal(lengths, dim), min_count=0).as_py(),
+    ):
+        return None
+    id_field = T.StructField("id", id_type)
+    batch_ids = spark.createDataFrame(
+        pa.table({"id": ids}), T.StructType([id_field])
+    )
+    tagged = p["lists"].select("id", F.lit("lists").alias("_t")).unionByName(
+        p["codes"].select("id", F.lit("codes").alias("_t"))
+    )
+    stored, (cids, codes) = run_concurrently(
+        lambda: tagged.join(
+            F.broadcast(batch_ids), "id", "left_semi"
+        ).collect(),
+        lambda: _ivf_pq_kernel(p["centroids"], p["codebooks"], m, dsub)(
+            pc.list_flatten(tab.column("_v")).to_numpy().reshape(-1, dim),
+            tab.column("_nrm").to_numpy(),
+        ),
+    )
+    held = {"lists": set(), "codes": set()}
+    for r in stored:
+        held[r["_t"]].add(r["id"])
+    new_l = [i for i, x in enumerate(ids) if x not in held["lists"]]
+    new_c = [
+        i for i, x in enumerate(ids)
+        if x not in held["codes"] and codes[i] is not None
+    ]
+    build_id = T.StructField("build_id", T.StringType())
+
+    def local(cols: dict, fields: list, n: int) -> tuple:
+        frame = spark.createDataFrame(
+            pa.table({**cols, "build_id": [bid] * n}),
+            T.StructType([*fields, build_id]),
+        )
+        return frame.coalesce(1), n
+
+    return (
+        local(
+            {"cid": cids[new_l], "id": [ids[i] for i in new_l]},
+            [T.StructField("cid", T.LongType()), id_field], len(new_l),
+        ),
+        local(
+            {"id": [ids[i] for i in new_c],
+             "codes": pa.array([codes[i] for i in new_c],
+                               pa.list_(pa.int64()))},
+            [id_field, T.StructField("codes", T.ArrayType(T.LongType()))],
+            len(new_c),
+        ),
+    )
 
 
 def ivf_pq_index_repair(

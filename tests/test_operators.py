@@ -3332,6 +3332,11 @@ def test_index_appends_refuse_dirty_batches(spark, sf_dir, warehouse):
         spark, cat, "default.emb_lshd",
         emb.filter(F.col("vec_id") % 2 == 0), num_planes=4,
     )
+    similarity.ivf_pq_build_index(
+        spark, cat, "default.emb_ivfpqd",
+        emb.filter(F.col("vec_id") % 2 == 0),
+        centroid_stride=5, pq_stride=5, max_codes=128,
+    )
     one = emb.filter(F.col("vec_id") == 1)
     dup_batch = one.unionAll(one)
     null_batch = spark.createDataFrame(
@@ -3351,6 +3356,7 @@ def test_index_appends_refuse_dirty_batches(spark, sf_dir, warehouse):
     for appender, idx in (
         (similarity.pq_append_to_index, "default.emb_pqd"),
         (similarity.lsh_append_to_index, "default.emb_lshd"),
+        (similarity.ivf_pq_append_to_index, "default.emb_ivfpqd"),
     ):
         with pytest.raises(ValueError, match="duplicate"):
             appender(spark, cat, idx, dup_batch)
@@ -3362,6 +3368,72 @@ def test_index_appends_refuse_dirty_batches(spark, sf_dir, warehouse):
             appender(spark, cat, idx, all_null_ids)
         # and an actually-empty batch stays a quiet no-op
         appender(spark, cat, idx, one.filter(F.col("vec_id") < 0))
+
+
+def test_ivf_pq_append_branches_commit_the_same_rows(
+    spark, sf_dir, warehouse, monkeypatch
+):
+    """A batch within the small-side cap appends on the driver, a larger
+    one through the distributed Arrow pass; the same batch must commit
+    the same lists and codes rows either way. The batch re-delivers
+    stored ids (partial re-delivery) and holds one zero-norm vector
+    (its lists row is kept, its codes row is not)."""
+    import uuid
+
+    from hive_io_experimental_spark.catalog import Catalog
+    from hive_io_experimental_spark.input import HiveInput, ScanSpec
+
+    cat = Catalog(warehouse)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    dim = int(emb.select(F.size("embedding")).first()[0])
+    # one stamp for both builds, so build_id compares row for row
+    with monkeypatch.context() as mp:
+        mp.setattr(uuid, "uuid4", lambda: uuid.UUID(int=16))
+        for idx in ("default.emb_ivfpq_drv", "default.emb_ivfpq_dist"):
+            similarity.ivf_pq_build_index(
+                spark, cat, idx, emb.filter(F.col("vec_id") % 2 == 0),
+                centroid_stride=5, pq_stride=5, max_codes=128,
+            )
+    batch = emb.filter(F.col("vec_id").isin(0, 2, 1, 3, 5)).unionByName(
+        spark.createDataFrame([(999_001, [0.0] * dim)], emb.schema)
+    )
+    local_calls = []
+    fresh_local = similarity._ivf_pq_fresh_local
+    monkeypatch.setattr(
+        similarity, "_ivf_pq_fresh_local",
+        lambda *a, **kw: local_calls.append(1) or fresh_local(*a, **kw),
+    )
+    v_drv = similarity.ivf_pq_append_to_index(
+        spark, cat, "default.emb_ivfpq_drv", batch
+    )
+    assert local_calls == [1]
+    monkeypatch.setattr(similarity, "_MAX_BROADCAST_QUERIES", 3)
+    v_dist = similarity.ivf_pq_append_to_index(
+        spark, cat, "default.emb_ivfpq_dist", batch
+    )
+    assert local_calls == [1]
+    assert v_drv == v_dist
+
+    inp = HiveInput(spark, cat)
+
+    def rows(table, cols):
+        return sorted(
+            tuple(r) for r in inp.read_table(ScanSpec(table=table))
+            .select(*cols).collect()
+        )
+
+    lists_cols = ("id", "cid", "build_id")
+    codes_cols = ("id", "codes", "build_id")
+    drv_lists = rows("default.emb_ivfpq_drv_lists", lists_cols)
+    drv_codes = rows("default.emb_ivfpq_drv", codes_cols)
+    assert drv_lists == rows("default.emb_ivfpq_dist_lists", lists_cols)
+    assert drv_codes == rows("default.emb_ivfpq_dist", codes_cols)
+    assert len({r[0] for r in drv_lists}) == len(drv_lists)
+    assert 999_001 in {r[0] for r in drv_lists}
+    assert 999_001 not in {r[0] for r in drv_codes}
+    assert {1, 3, 5} <= {r[0] for r in drv_codes}
 
 
 def test_ivf_pq_torn_append_is_consistent_and_repairable(
