@@ -1769,7 +1769,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_cluster_rows: int | None = None,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """SemDeDup-style cluster-partitioned semantic dedup (Abbas et al.,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -1795,8 +1794,8 @@ def semantic_dedup(
          checkability is not required);
       2. every vector map-side assigned to its nearest centroid (max
          cosine, ties to lowest cid) — Arrow/BLAS against the broadcast
-         centroid matrix by default, zero corpus-side exchange
-         (use_pandas=False keeps the relational cross-check tier);
+         centroid matrix, zero corpus-side exchange (the DuckDB twin's
+         window assignment is the reference);
       3. within-cluster pair scoring: equi-join on cid, lower-id side is
          the keep candidate, exact JVM cosine fold rounded to 6 (the
          bit-identical-to-DuckDB fold embedding_neardup documents),
@@ -1820,10 +1819,7 @@ def semantic_dedup(
     """
     from pyspark.sql import Window
 
-    from hive_io_experimental_spark.functions.vectors import (
-        dot_product,
-        l2_norm,
-    )
+    from hive_io_experimental_spark.functions.vectors import l2_norm
     from hive_io_experimental_spark.operators.similarity import (
         _as_double,
         _assign_pandas,
@@ -1848,31 +1844,15 @@ def semantic_dedup(
     cents = df.filter(F.col(id_col) % centroid_stride == 0).select(
         F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv")
     )
-    if use_pandas:
-        cent_rows = [r.asDict() for r in cents.collect()]
-        if not cent_rows:
-            # no id hits the stride (empty or sparse-id input): the
-            # contract's empty frame, not a crash
-            return spark.createDataFrame(
-                [], "doc_id long, kept_id long, cosine double"
-            )
-        assigned = _assign_pandas(s, "_sd_id", "_sd_v", "_sd_nrm",
-                                  cent_rows, keep=1)
-    else:
-        bc = F.broadcast(cents.withColumn("cnrm", l2_norm(F.col("cv"))))
-        cos_c = F.try_divide(
-            dot_product(F.col("_sd_v"), F.col("cv")),
-            F.col("_sd_nrm") * F.col("cnrm"),
+    cent_rows = [r.asDict() for r in cents.collect()]
+    if not cent_rows:
+        # no id hits the stride (empty or sparse-id input): the
+        # contract's empty frame, not a crash
+        return spark.createDataFrame(
+            [], "doc_id long, kept_id long, cosine double"
         )
-        w = Window.partitionBy("_sd_id").orderBy(
-            cos_c.desc(), F.col("cid").asc()
-        )
-        assigned = (
-            s.crossJoin(bc)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "cv", "cnrm")
-        )
+    assigned = _assign_pandas(s, "_sd_id", "_sd_v", "_sd_nrm",
+                              cent_rows, keep=1)
 
     if max_cluster_rows is not None:
         assigned = reuse(assigned)
@@ -1925,13 +1905,11 @@ def semantic_dedup_survivors(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_cluster_rows: int | None = None,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """The kept side of semantic_dedup: input rows minus the dropped set
     (anti-join on id). Same parameters; see semantic_dedup."""
     dropped = semantic_dedup(
-        df, threshold, centroid_stride, vec_col, id_col,
-        max_cluster_rows, use_pandas,
+        df, threshold, centroid_stride, vec_col, id_col, max_cluster_rows,
     )
     return df.join(
         dropped.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
@@ -1946,7 +1924,6 @@ def semantic_dedup_against_corpus(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_cluster_rows: int | None = None,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Incremental SemDeDup: semantic near-dups of an incoming batch
     AGAINST a stored corpus, compared only within shared

@@ -575,7 +575,6 @@ def cluster_balanced_sample(
     salt: str = "cbal:",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Cluster-balanced selection: keep ~sqrt(n_c) rows from each semantic
     cluster — the curation move that stops dense near-duplicate regions
@@ -591,8 +590,8 @@ def cluster_balanced_sample(
          ``centroid_stride=None`` auto-balances at sqrt(2n) via
          resolve_semantic_stride — assignment stays the dominant, linear
          term). Assignment is Arrow/BLAS map-side against the broadcast
-         centroid matrix (zero corpus-side exchange); ``use_pandas=False``
-         keeps the relational oracle tier.
+         centroid matrix (zero corpus-side exchange); the DuckDB twin's
+         window assignment is the reference.
       2. per-cluster quota = clamp(ceil(sqrt(n_c)), min_per_cluster,
          max_per_cluster) — sqrt is IEEE-correctly-rounded in both engines,
          so the integer quota is engine-identical (pow is NOT guaranteed
@@ -609,10 +608,7 @@ def cluster_balanced_sample(
 
     Returns one row per KEPT vector: (id_col, cid, n_cluster, quota).
     """
-    from hive_io_experimental_spark.functions.vectors import (
-        dot_product,
-        l2_norm,
-    )
+    from hive_io_experimental_spark.functions.vectors import l2_norm
     from hive_io_experimental_spark.operators.dedup import (
         resolve_semantic_stride,
     )
@@ -644,32 +640,14 @@ def cluster_balanced_sample(
     cents = df.filter(F.col(id_col) % centroid_stride == 0).select(
         F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv")
     )
-    if use_pandas:
-        cent_rows = [r.asDict() for r in cents.collect()]
-        if not cent_rows:
-            return spark.createDataFrame(
-                [], f"{id_col} long, cid long, n_cluster long, quota long"
-            )
-        assigned = _assign_pandas(
-            s, "_cb_id", "_cb_v", "_cb_nrm", cent_rows, keep=1
+    cent_rows = [r.asDict() for r in cents.collect()]
+    if not cent_rows:
+        return spark.createDataFrame(
+            [], f"{id_col} long, cid long, n_cluster long, quota long"
         )
-    else:
-        bc = F.broadcast(cents.withColumn("cnrm", l2_norm(F.col("cv"))))
-        cos_c = F.try_divide(
-            dot_product(F.col("_cb_v"), F.col("cv")),
-            F.col("_cb_nrm") * F.col("cnrm"),
-        )
-        w = Window.partitionBy("_cb_id").orderBy(
-            cos_c.desc(), F.col("cid").asc()
-        )
-        assigned = (
-            s.crossJoin(bc)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "cv", "cnrm")
-        )
-
-    assigned = assigned.select("_cb_id", "cid")
+    assigned = _assign_pandas(
+        s, "_cb_id", "_cb_v", "_cb_nrm", cent_rows, keep=1
+    ).select("_cb_id", "cid")
     quota = F.ceil(F.sqrt(F.count(F.lit(1)))).cast("long")
     quota = F.greatest(quota, F.lit(min_per_cluster).cast("long"))
     if max_per_cluster is not None:

@@ -15,14 +15,12 @@ Two tiers, matching how real vector pipelines scale:
 
 At 100 TB: broadcast the query set (it is always the small side), never the
 corpus; bucket join keys are (plane-bits), evenly distributed by
-construction. A numpy/Arrow batched variant (mapInPandas, BLAS dot products)
-is provided for wide-embedding workloads where per-element codegen loses to
-vectorized C — switch via ``use_pandas=True``.
+construction. The IVF/PQ tiers assign vectors to centroids and codewords in
+Arrow/BLAS batches (mapInPandas against broadcast geometry); their DuckDB
+twins are the reference.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -65,7 +63,6 @@ def cosine_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Exact top-k nearest corpus vectors per query vector, by cosine.
 
@@ -80,8 +77,6 @@ def cosine_topk(
     """
     c = spread(corpus).select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    if use_pandas:
-        return _cosine_topk_pandas(c, q, k)
     _require_small_query_side(q, "cosine_topk")
     c = c.withColumn("cnrm", l2_norm(F.col("cv")))
     q = q.withColumn("qnrm", l2_norm(F.col("qv")))
@@ -100,7 +95,7 @@ def cosine_topk(
 
 
 # Cap on driver-collected/broadcast query vectors for EVERY broadcast
-# top-k path — pandas closure AND the JVM F.broadcast(q) joins. An explicit
+# top-k path — driver collects AND the JVM F.broadcast(q) joins. An explicit
 # broadcast hint bypasses autoBroadcastJoinThreshold, so without this check
 # a large query side turns into an executor OOM instead of a helpful error
 # (~64 KB/vector at dim 64 -> ~4 GB worst case is already too big).
@@ -148,54 +143,6 @@ def _too_many_queries(caller: str, limit: int, escape: str) -> ValueError:
     )
 
 
-def _cosine_topk_pandas(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """Arrow-batched exact top-k: numpy matmul per corpus partition.
-
-    The query matrix rides along as a broadcast-joined literal-free pattern:
-    collected once on the driver (queries are small by contract) and closed
-    over — each executor computes Q x batch^T with BLAS. The contract is
-    ENFORCED: more than ``_MAX_BROADCAST_QUERIES`` queries raises before
-    anything is collected — use :func:`cosine_topk_bucketed` for large
-    query sets.
-    """
-    import numpy as np
-
-    _require_small_query_side(q, "cosine_topk(use_pandas=True)")
-    q_rows = q.collect()
-    q_ids = np.array([r["query_id"] for r in q_rows])
-    q_mat = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    spark = c.sparkSession
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_mat = np.array(list(pdf["cv"]), dtype=np.float64)
-            c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = q_norm @ c_norm.T  # |Q| x |batch|
-            n_ids = pdf["neighbor_id"].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                mask = n_ids != qid
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": n_ids[mask],
-                        "cosine": np.round(sims[qi][mask], 6),
-                    }
-                )
-
-    scored = c.mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
 # ---------------------------------------------------------------------------
 # LSH bucketing
 # ---------------------------------------------------------------------------
@@ -211,49 +158,6 @@ def _plane_component(plane: int, dim: int) -> float:
 
     nib = int(hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[0], 16)
     return 1.0 if nib & 1 == 1 else -1.0
-
-
-def hyperplane_lsh_buckets_pandas(
-    df: DataFrame,
-    num_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """BLAS twin of :func:`hyperplane_lsh_buckets` for wide embeddings.
-
-    Identical bucket assignments (same md5-derived plane matrix, and
-    sign(dot) is exact for both summation orders here because the planes
-    are ±1 and the margin from zero is far above float noise for real
-    data — verified by the equivalence test), but computed as one Arrow
-    batch matmul per partition: |batch| x dim @ dim x planes. Wins over
-    per-element codegen once dim x planes is large (the HOF fold runs
-    interpreted); still a pure map — zero shuffle at any scale.
-    """
-    import numpy as np
-
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col))).first()[0]
-    planes = np.array(
-        [[_plane_component(p, d) for p in range(num_planes)] for d in range(dim)],
-        dtype=np.float64,
-    )  # dim x planes — a few KB closed over, broadcast with the task
-    weights = (1 << np.arange(num_planes)).astype(np.int64)
-
-    def bucketize(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf["v"]), dtype=np.float64)
-            bits = (mat @ planes) >= 0  # |batch| x planes
-            yield pd.DataFrame(
-                {"id": pdf["id"], "bucket": bits @ weights}
-            )
-
-    v = spread(df).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
-    return v.mapInPandas(bucketize, "id long, bucket long")
 
 
 # Auto-sized LSH: with a FIXED plane count, bucket occupancy grows
@@ -288,7 +192,6 @@ def hyperplane_lsh_buckets(
     num_planes: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = False,
     dim: int | None = None,
 ) -> DataFrame:
     """(id, bucket) — sign-of-dot-product LSH bucket per vector.
@@ -304,14 +207,7 @@ def hyperplane_lsh_buckets(
     columns are fixed-width by contract) unless the caller passes ``dim``
     — operators that bucket two frames with one shared layout probe once
     and pass it to both calls, saving a scheduled job per call.
-    ``use_pandas=True`` switches to the Arrow/BLAS twin
-    (:func:`hyperplane_lsh_buckets_pandas`) for wide embeddings — same
-    buckets, vectorized matmul instead of the fold.
     """
-    if use_pandas:
-        return hyperplane_lsh_buckets_pandas(
-            df, num_planes, vec_col, id_col, dim=dim
-        )
     df = spread(df)
     if dim is None:
         dim = df.select(F.size(F.col(vec_col))).first()[0]
@@ -355,7 +251,6 @@ def ivf_topk(
     nprobe: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """IVF-flat approximate top-k: inverted-file search with a deterministic
     coarse quantizer.
@@ -371,19 +266,16 @@ def ivf_topk(
          those lists -> candidates shrink by ~ncentroids/nprobe.
 
     Scale notes: the assignment step is |corpus| x |centroids| — it runs
-    BY DEFAULT as a mapInPandas BLAS pass against broadcast centroids
-    (same shape as embedding_neardup's candidate stage, zero corpus-side
-    shuffle); ``use_pandas=False`` selects the relational form, which
-    keeps every intermediate oracle-checkable and serves as the
-    cross-check tier. Search is an equi-join on centroid id: no theta
-    join anywhere.
+    as a mapInPandas BLAS pass against broadcast centroids (same shape as
+    embedding_neardup's candidate stage, zero corpus-side shuffle); the
+    DuckDB twin's relational assignment is the reference. Search is an
+    equi-join on centroid id: no theta join anywhere. A quantizer with
+    no centroid (no id hits the stride) returns the empty contract frame.
     """
     cents = corpus.filter(F.col(id_col) % centroid_stride == 0).select(
         F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv")
     )
-    return _ivf_search(
-        corpus, queries, cents, k, nprobe, vec_col, id_col, use_pandas
-    )
+    return _ivf_search(corpus, queries, cents, k, nprobe, vec_col, id_col)
 
 
 def ivf_topk_trained(
@@ -768,16 +660,15 @@ def _assign_pandas(
     side: DataFrame, sid: str, vname: str, nrmname: str,
     cent_rows: list, keep: int,
 ) -> DataFrame:
-    """Arrow/BLAS twin of the relational ``nearest`` assignment.
+    """Nearest-centroid assignment as one Arrow/BLAS matmul per batch.
 
-    One matmul per batch against the closed-over centroid matrix (KBs —
-    the same data the relational form broadcasts). Ordering matches the
-    relational form: cosine descending, ties to the lowest centroid id
-    (stable argsort over cid-sorted centroids). BLAS summation order can
-    differ from the sequential fold at the last ulp — irrelevant for
-    assignment, where centroid separation dwarfs float noise; the
-    relational path stays the oracle-checkable tier and this is the
-    wide-embedding scale path (ROADMAP: assignment step at scale).
+    The centroid matrix (KBs) is closed over. Ordering matches the
+    DuckDB twins' window assignment, which is the reference: cosine
+    descending, ties to the lowest centroid id (stable argsort over
+    cid-sorted centroids). BLAS summation order can differ from the
+    sequential fold at the last ulp — irrelevant for assignment, where
+    centroid separation dwarfs float noise. ``cent_rows`` must be
+    non-empty; callers return their empty contract frame first.
     """
     import numpy as np
 
@@ -828,17 +719,18 @@ def _ivf_assign(
     nprobe: int,
     vec_col: str,
     id_col: str,
-    use_pandas: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared assign/probe stage: returns (inverted, probes).
 
-    inverted: (cid, neighbor_id, nv, nnrm) — every corpus vector in its
-    nearest-centroid list; probes: (cid, query_id, qv, qnrm) — each
-    query replicated to its ``nprobe`` nearest lists. Assignment runs as
-    the Arrow/BLAS map-side pass by default (broadcast centroid matrix,
-    zero corpus-side exchange); ``use_pandas=False`` keeps the
-    relational (oracle cross-check) form. Both scoring tiers — fp32
-    (_ivf_search) and int8 (ivf_quantized_topk) — build on this.
+    inverted: (neighbor_id, nv, nnrm, cid) — every corpus vector in its
+    nearest-centroid list; probes: (query_id, qv, qnrm, cid) — each
+    query replicated to its ``nprobe`` nearest lists. Assignment is the
+    Arrow/BLAS map-side pass (_assign_pandas: broadcast centroid matrix,
+    zero corpus-side exchange); the DuckDB twins' relational assignment
+    is the reference. Both scoring tiers — fp32 (_ivf_search) and int8
+    (ivf_quantized_topk) — build on this. An empty quantizer yields
+    empty lists and probes, so every caller returns its empty contract
+    frame.
 
     The probe table (queries x nprobe) is broadcast by the scoring
     joins, so the queries-<<-corpus contract is enforced here once for
@@ -851,29 +743,11 @@ def _ivf_assign(
     _require_small_query_side(
         queries.select(F.col(id_col)), "IVF top-k (broadcast probes)"
     )
-    cents = F.broadcast(centroids.withColumn("cnrm", l2_norm(F.col("cv"))))
     # ONE centroid collect serves both assignment closures — the corpus
     # and query sides each collected the same (often corpus-derived)
     # centroid frame, i.e. one redundant scan job per IVF call (r15
     # optimization round, guide §1.2)
-    cent_rows = (
-        [r.asDict() for r in centroids.collect()] if use_pandas else None
-    )
-
-    def nearest(side: DataFrame, sid: str, vname: str, nrmname: str, keep: int):
-        if use_pandas:
-            return _assign_pandas(side, sid, vname, nrmname, cent_rows, keep)
-        cos = F.try_divide(
-            dot_product(F.col(vname), F.col("cv")),
-            F.col(nrmname) * F.col("cnrm"),
-        )
-        w = Window.partitionBy(sid).orderBy(cos.desc(), F.col("cid").asc())
-        return (
-            side.crossJoin(cents)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .drop("_rn", "cv", "cnrm")
-        )
+    cent_rows = [r.asDict() for r in centroids.collect()]
 
     c = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("nv")
@@ -881,9 +755,14 @@ def _ivf_assign(
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
     ).withColumn("qnrm", l2_norm(F.col("qv")))
+    if not cent_rows:
+        # no id hits the stride: no lists to probe (limit(0) plans as an
+        # empty local relation, no job)
+        no_list = F.lit(None).cast("long").alias("cid")
+        return c.select("*", no_list).limit(0), q.select("*", no_list).limit(0)
 
-    inverted = nearest(c, "neighbor_id", "nv", "nnrm", keep=1)
-    probes = nearest(q, "query_id", "qv", "qnrm", keep=nprobe)
+    inverted = _assign_pandas(c, "neighbor_id", "nv", "nnrm", cent_rows, keep=1)
+    probes = _assign_pandas(q, "query_id", "qv", "qnrm", cent_rows, keep=nprobe)
     return inverted, probes
 
 
@@ -895,24 +774,20 @@ def _ivf_search(
     nprobe: int,
     vec_col: str,
     id_col: str,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Shared IVF machinery: assign -> probe -> list-equi-join -> rank.
 
     ``centroids`` must have columns (cid, cv: array<double>).
 
-    Assignment DEFAULTS to the Arrow/BLAS map-side twin (broadcast
-    centroid matrix, one matmul + argmax per batch, ZERO corpus-side
-    exchanges): the relational variant crossJoins the corpus against the
-    centroids and ranks with a window over ``sid`` — a shuffle of
-    corpus x n_centroids rows, an 8-64x amplification for an argmax at
-    100 TB (r5 audit). ``use_pandas=False`` keeps the relational form as
-    the oracle cross-check tier (every intermediate SQL-expressible);
-    equivalence of the two is pinned by
-    test_ivf_pandas_assignment_matches_relational.
+    Assignment is the Arrow/BLAS map-side pass (broadcast centroid
+    matrix, one matmul + argmax per batch, ZERO corpus-side exchanges).
+    A relational crossJoin of the corpus against the centroids, ranked
+    by a window, would shuffle corpus x n_centroids rows — an 8-64x
+    amplification for an argmax at 100 TB (r5 audit); that form lives
+    only in the DuckDB twins, which are the reference.
     """
     inverted, probes = _ivf_assign(
-        corpus, queries, centroids, nprobe, vec_col, id_col, use_pandas
+        corpus, queries, centroids, nprobe, vec_col, id_col
     )
     cos = _pair_cosine("qv", "qnrm", "nv", "nnrm")
     scored = (
@@ -992,14 +867,13 @@ def ivf_quantized_topk(
     nprobe: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """IVF-SQ8: inverted-file candidate pruning + int8 in-list scoring —
     the memory-lean serving tier (the FAISS "IVF,SQ8" shape).
 
     Assignment and probing run on fp32 against the deterministic sampled
     coarse quantizer (identical candidate structure to :func:`ivf_topk`,
-    BLAS map-side by default); the FINAL scoring pass reads only the
+    BLAS map-side); the FINAL scoring pass reads only the
     4x-smaller int8 codes and runs the same exact int64 arithmetic as
     quantized_cosine_topk (per-vector scales cancel in cosine). Both
     stages are deterministic, so the DuckDB twin composes the IVF
@@ -1013,7 +887,7 @@ def ivf_quantized_topk(
         F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv")
     )
     inverted, probes = _ivf_assign(
-        corpus, queries, cents, nprobe, vec_col, id_col, use_pandas
+        corpus, queries, cents, nprobe, vec_col, id_col
     )
     return _ivf_quantized_score(
         corpus, queries, inverted, probes, k, vec_col, id_col
@@ -2003,10 +1877,10 @@ def _pq_encode_pandas(
 ) -> DataFrame:
     """Arrow/BLAS encode: one matmul per (batch, subspace) against the
     closed-over codebook matrices; squared-L2 assignment with stable
-    ties to the lowest code — matches the relational tier the same way
-    _assign_pandas matches its relational twin (last-ulp BLAS summation
-    differences cannot flip assignments whose codeword separation dwarfs
-    float noise)."""
+    ties to the lowest code — matches the DuckDB twin's window encode,
+    the reference, the same way _assign_pandas matches its twin
+    (last-ulp BLAS summation differences cannot flip assignments whose
+    codeword separation dwarfs float noise)."""
     import numpy as np
 
     mats = _codebook_matrices(cb_rows, num_subspaces)
@@ -2137,79 +2011,28 @@ def pq_encode(
     max_codes: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Encode every vector as ``num_subspaces`` dense codebook indices:
     (id, codes array<long>) — the m-byte-per-vector representation that
     makes a 100 TB embedding corpus a ~1 TB codes table (64-dim fp32 =
     256 B -> 4 codes; the codebook rides along in KBs). Assignment is
     squared-L2 per subspace (argmax x.c - 0.5*c.c, ties to the lowest
-    code). Map-side BLAS against the closure codebooks by default —
-    zero corpus-side exchange; ``use_pandas=False`` is the relational
-    oracle tier (explode by subspace, broadcast-join the codebook,
-    window argmax — SQL-expressible end to end)."""
+    code). Map-side BLAS against the closure codebooks — zero
+    corpus-side exchange; the DuckDB twin (explode by subspace, join the
+    codebook, window argmax) is the reference."""
     if codebooks is None:
         codebooks = pq_codebooks_sampled(
             corpus, num_subspaces, centroid_stride, max_codes,
             vec_col, id_col,
         )
     u = _unit_vectors(spread(corpus), vec_col, id_col)
-    if use_pandas:
-        # geometry comes from the codebooks (the collect the encoder
-        # needs anyway) — the corpus-side size probe job this path used
-        # to run duplicated information the codebook rows already carry
-        # (r14 optimization round: one fewer corpus-scan job per encode)
-        cb_rows = [r.asDict() for r in codebooks.collect()]
-        if not cb_rows:
-            raise ValueError("pq_encode: empty codebook frame")
-        dsub = len(cb_rows[0]["cv"])
-        return _pq_encode_pandas(u, cb_rows, num_subspaces, dsub)
-    probe = u.select(F.size("v").alias("d")).first()
-    if probe is None:
-        return corpus.sparkSession.createDataFrame(
-            [], "id long, codes array<long>"
-        )
-    dsub = probe["d"] // num_subspaces
-    cb = F.broadcast(
-        codebooks.withColumn("_csq", dot_product(F.col("cv"), F.col("cv")))
-    )
-    w = Window.partitionBy("id", "j").orderBy(
-        (
-            dot_product(F.col("_sub"), F.col("cv"))
-            - F.lit(0.5) * F.col("_csq")
-        ).desc(),
-        F.col("code").asc(),
-    )
-    assigned = (
-        u.select(
-            "id",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(num_subspaces - 1))
-            ).alias("j"),
-            "v",
-        )
-        .select(
-            "id", "j",
-            F.slice(F.col("v"), F.col("j") * dsub + 1, dsub).alias("_sub"),
-        )
-        .join(cb, "j")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-    )
-    return (
-        assigned.groupBy("id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("j", "code"))
-            ).alias("_jc")
-        )
-        .select(
-            "id",
-            F.transform(
-                F.col("_jc"), lambda s: s["code"].cast("long")
-            ).alias("codes"),
-        )
-    )
+    # the subvector width comes from the codebook rows the encoder
+    # collects anyway, so no corpus-side size probe job runs
+    cb_rows = [r.asDict() for r in codebooks.collect()]
+    if not cb_rows:
+        raise ValueError("pq_encode: empty codebook frame")
+    dsub = len(cb_rows[0]["cv"])
+    return _pq_encode_pandas(u, cb_rows, num_subspaces, dsub)
 
 
 def pq_topk(
@@ -2222,7 +2045,6 @@ def pq_topk(
     codebooks: DataFrame | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """PQ top-k by asymmetric distance computation (ADC): queries stay
     fp32, the corpus is scanned as codes, and each candidate's score is
@@ -2251,7 +2073,7 @@ def pq_topk(
         )
     codes = pq_encode(
         corpus, codebooks, num_subspaces, centroid_stride, max_codes,
-        vec_col, id_col, use_pandas,
+        vec_col, id_col,
     )
     qu = _unit_vectors(queries, vec_col, id_col)
     probe = qu.select(F.size("v").alias("d")).first()
@@ -2380,7 +2202,6 @@ def ivf_pq_topk(
     codebooks: DataFrame | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_pandas: bool = True,
 ) -> DataFrame:
     """IVF-PQ: inverted-file candidate pruning + PQ-ADC in-list scoring —
     the billion-scale serving composition (the FAISS "IVFx,PQy" index,
@@ -2389,8 +2210,8 @@ def ivf_pq_topk(
 
     Assignment and probing run on fp32 against the deterministic sampled
     coarse quantizer — the identical candidate structure to
-    :func:`ivf_topk` and :func:`ivf_quantized_topk` (Arrow/BLAS map-side
-    by default, zero corpus-side exchange). The FINAL scoring pass never
+    :func:`ivf_topk` and :func:`ivf_quantized_topk` (Arrow/BLAS map-side,
+    zero corpus-side exchange). The FINAL scoring pass never
     touches raw vectors: each candidate costs m LUT lookups + adds over
     its m-byte PQ codes (pq_stride/max_codes-capped sampled codebooks, so
     encode stays linear — the r8 gate-shape rule). At 100 TB the wins
@@ -2428,66 +2249,46 @@ def ivf_pq_topk(
             corpus, num_subspaces, pq_stride, max_codes, vec_col, id_col
         )
     qu = _unit_vectors(queries, vec_col, id_col)
-    if use_pandas:
-        # ONE fused Arrow pass over the raw corpus yields BOTH the
-        # coarse assignment and the PQ codes (r15 optimization round —
-        # the same _ivf_pq_encode_assign_pandas the persisted-index
-        # build/append/repair paths use; previously the direct operator
-        # ran a separate assignment pass and encode pass, i.e. two full
-        # reads of the embedding column, plus two centroid collects and
-        # a query-side dimension probe job). Bit-identity with the
-        # two-pass shape is the r14 argument, oracle-pinned.
-        _require_small_query_side(
-            queries.select(F.col(id_col)), "IVF top-k (broadcast probes)"
+    # ONE fused Arrow pass over the raw corpus yields BOTH the coarse
+    # assignment and the PQ codes — the _ivf_pq_encode_assign_pandas
+    # pass the persisted-index build/append/repair paths use — so the
+    # embedding column is read once and the geometry collected once
+    _require_small_query_side(
+        queries.select(F.col(id_col)), "IVF top-k (broadcast probes)"
+    )
+    cent_rows, cb_rows = run_concurrently(
+        lambda: [r.asDict() for r in cents.collect()],
+        lambda: [r.asDict() for r in codebooks.collect()],
+    )
+    if not cent_rows:
+        # no id hits the stride: no lists to probe
+        return corpus.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, adc_score double, rank long"
         )
-        cent_rows, cb_rows = run_concurrently(
-            lambda: [r.asDict() for r in cents.collect()],
-            lambda: [r.asDict() for r in codebooks.collect()],
-        )
-        if not cb_rows:
-            raise ValueError("ivf_pq_topk: empty codebook frame")
-        dsub = len(cb_rows[0]["cv"])
-        c = spread(corpus).select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
-        ).withColumn("_nrm", l2_norm(F.col("_v")))
-        # the fused rows already carry (cid, codes) per id, so the
-        # scored side is one filter of the single pass — no reuse() and
-        # no self-join back on id
-        inv = _ivf_pq_encode_assign_pandas(
-            c, cent_rows, cb_rows, num_subspaces, dsub
-        ).filter(F.col("codes").isNotNull()).select(
-            "cid", F.col("id").alias("neighbor_id"), "codes"
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-        ).withColumn("qnrm", l2_norm(F.col("qv")))
-        probes = _assign_pandas(
-            q, "query_id", "qv", "qnrm", cent_rows, keep=nprobe
-        )
-        luts = _pq_query_luts(
-            qu, _local_codebooks(corpus.sparkSession, cb_rows),
-            num_subspaces, dsub,
-        )
-    else:
-        inverted, probes = _ivf_assign(
-            corpus, queries, cents, nprobe, vec_col, id_col, use_pandas
-        )
-        codes = pq_encode(
-            corpus, codebooks, num_subspaces, pq_stride, max_codes,
-            vec_col, id_col, use_pandas,
-        )
-        probe = qu.select(F.size("v").alias("d")).first()
-        if probe is None:
-            return corpus.sparkSession.createDataFrame(
-                [],
-                "query_id long, neighbor_id long, adc_score double, "
-                "rank long",
-            )
-        dsub = probe["d"] // num_subspaces
-        luts = _pq_query_luts(qu, codebooks, num_subspaces, dsub)
-        inv = inverted.select("cid", "neighbor_id").join(
-            codes.withColumnRenamed("id", "neighbor_id"), "neighbor_id"
-        )
+    if not cb_rows:
+        raise ValueError("ivf_pq_topk: empty codebook frame")
+    dsub = len(cb_rows[0]["cv"])
+    c = spread(corpus).select(
+        F.col(id_col).alias("id"), _as_double(vec_col).alias("_v")
+    ).withColumn("_nrm", l2_norm(F.col("_v")))
+    # the fused rows already carry (cid, codes) per id, so the scored
+    # side is one filter of the single pass — no reuse() and no
+    # self-join back on id
+    inv = _ivf_pq_encode_assign_pandas(
+        c, cent_rows, cb_rows, num_subspaces, dsub
+    ).filter(F.col("codes").isNotNull()).select(
+        "cid", F.col("id").alias("neighbor_id"), "codes"
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+    ).withColumn("qnrm", l2_norm(F.col("qv")))
+    probes = _assign_pandas(
+        q, "query_id", "qv", "qnrm", cent_rows, keep=nprobe
+    )
+    luts = _pq_query_luts(
+        qu, _local_codebooks(corpus.sparkSession, cb_rows),
+        num_subspaces, dsub,
+    )
     prb = probes.select("cid", "query_id").join(luts, "query_id")
     scored = (
         inv.join(F.broadcast(prb), "cid")

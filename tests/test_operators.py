@@ -98,20 +98,6 @@ def test_cosine_topk_ranks_by_similarity(spark):
     assert order == [1, 2, 3]  # descending cosine: ~0.994, 0, -1
 
 
-def test_cosine_topk_pandas_agrees_with_sql(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    sql_rows = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in similarity.cosine_topk(emb, queries, k=5).collect()
-    }
-    pd_rows = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in similarity.cosine_topk(emb, queries, k=5, use_pandas=True).collect()
-    }
-    assert sql_rows == pd_rows
-
-
 def test_lsh_bucket_recall_on_identical_vectors(spark):
     # identical vectors must share a bucket under any hyperplane set
     df = spark.createDataFrame(
@@ -381,22 +367,6 @@ def test_duplicate_clusters_chain(spark):
     assert clusters[3] in (1, 3)
 
 
-def test_lsh_buckets_pandas_twin_matches_fold(spark, sf_dir):
-    """The BLAS bucketizer must produce bit-identical bucket assignments to
-    the JVM fold formulation (same plane matrix, sign decision)."""
-    from hive_io_experimental_spark.operators.similarity import (
-        hyperplane_lsh_buckets,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    fold = {(r.id, r.bucket) for r in hyperplane_lsh_buckets(emb).collect()}
-    blas = {
-        (r.id, r.bucket)
-        for r in hyperplane_lsh_buckets(emb, use_pandas=True).collect()
-    }
-    assert fold == blas and len(fold) > 0
-
-
 def test_embedding_neardup_enforces_block_cap(spark):
     """The exact all-pairs contract is bounded: past max_blocks the
     operator must refuse with guidance, not emit a quadratic plan."""
@@ -505,26 +475,6 @@ def test_numeric_outliers_flags_extremes(spark):
     out = numeric_outliers(df, "value", "event_id").collect()
     assert [r.id for r in out] == [100]
     assert out[0].zscore > 3
-
-
-def test_ivf_pandas_assignment_matches_relational(spark, sf_dir):
-    """The BLAS assignment twin must produce the same IVF top-k as the
-    relational (oracle-checkable) assignment on the same quantizer."""
-    from pyspark.sql import functions as F
-
-    from hive_io_experimental_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    rel = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(emb, queries, k=5, use_pandas=False).collect()
-    }
-    blas = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(emb, queries, k=5, use_pandas=True).collect()
-    }
-    assert rel == blas and len(rel) > 0
 
 
 def test_event_props_stats_extracts_json(spark):
@@ -1637,8 +1587,6 @@ def test_broadcast_topk_guard_rejects_large_query_side(spark):
     with pytest.raises(ValueError, match="cosine_topk_bucketed"):
         similarity.cosine_topk(corpus, big, k=3)
     with pytest.raises(ValueError, match="cosine_topk_bucketed"):
-        similarity.cosine_topk(corpus, big, k=3, use_pandas=True)
-    with pytest.raises(ValueError, match="cosine_topk_bucketed"):
         similarity.quantized_cosine_topk(corpus, big, k=3)
 
 
@@ -2255,41 +2203,9 @@ def test_semantic_dedup_cluster_cap_enforced(spark):
     assert guarded.count() == 3
 
 
-def test_semantic_dedup_pandas_matches_relational(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = {
-        tuple(r)
-        for r in dedup.semantic_dedup(emb, threshold=0.35).collect()
-    }
-    b = {
-        tuple(r)
-        for r in dedup.semantic_dedup(
-            emb, threshold=0.35, use_pandas=False
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 # ---------------------------------------------------------------------------
 # product quantization (PQ / ADC, Jégou et al. TPAMI 2011)
 # ---------------------------------------------------------------------------
-
-def test_pq_encode_pandas_matches_relational(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = {
-        (r.id, tuple(r.codes))
-        for r in similarity.pq_encode(
-            emb, centroid_stride=5, max_codes=128
-        ).collect()
-    }
-    b = {
-        (r.id, tuple(r.codes))
-        for r in similarity.pq_encode(
-            emb, centroid_stride=5, max_codes=128, use_pandas=False
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
 
 def test_pq_topk_exact_on_codebook_members(spark):
     # a vector that IS a codeword reconstructs losslessly, so its ADC
@@ -2718,6 +2634,26 @@ def test_ivf_pq_empty_queries_schema(spark):
     )
     assert out.columns == ["query_id", "neighbor_id", "adc_score", "rank"]
     assert out.count() == 0
+
+
+@pytest.mark.parametrize(
+    "op, score_col",
+    [
+        ("ivf_topk", "cosine"),
+        ("ivf_quantized_topk", "qcosine"),
+        ("ivf_pq_topk", "adc_score"),
+    ],
+)
+def test_ivf_sparse_ids_empty_quantizer_contract(spark, op, score_col):
+    # no id hits the stride -> an empty coarse quantizer: the documented
+    # empty frame, not a crash building the centroid matrix
+    emb = spark.createDataFrame(
+        [(i, [float(i % 4 == j) for j in range(4)]) for i in (1, 3, 5, 7)],
+        "vec_id long, embedding array<double>",
+    )
+    out = getattr(similarity, op)(emb, emb, k=3, centroid_stride=50)
+    assert out.columns == ["query_id", "neighbor_id", score_col, "rank"]
+    assert out.collect() == []
 
 
 # ---------------------------------------------------------------------------

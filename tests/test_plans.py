@@ -476,8 +476,8 @@ def test_zone_pruning_keeps_orphan_directory_rows(spark, warehouse):
 
 def test_ivf_assignment_is_map_side_by_default(spark, sf_dir):
     """The IVF corpus->centroid assignment must not shuffle the corpus:
-    the default (BLAS mapInPandas against broadcast centroids) plans as a
-    pure map stage. Exchanges in the whole query: the spread() round-robin
+    the BLAS mapInPandas pass against broadcast centroids plans as a pure
+    map stage. Exchanges in the whole query: the spread() round-robin
     widening (x2: corpus + query sides) and the final rank window on
     query_id — and, critically, NO hashpartitioning on neighbor_id, which
     is the signature of the relational crossJoin+window assignment
@@ -491,7 +491,3 @@ def test_ivf_assignment_is_map_side_by_default(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(neighbor_id" not in plan
     assert rep["num_exchanges"] <= 3
-    # the relational cross-check tier DOES pay the assignment shuffle
-    rel = ivf_topk(emb, queries, k=5, use_pandas=False)
-    rel_plan = rel._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(neighbor_id" in rel_plan
