@@ -26,7 +26,17 @@ from pyspark.sql import functions as F
 
 
 def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    """Live entries in the context's persistent-RDD registry.
+
+    Counted through the registry's key set, not ``getPersistentRDDs()``:
+    that returns a map of STRONG RDD references, and py4j releases the
+    JVM side of a dropped wrapper asynchronously (its finalizer thread
+    sleeps up to 1 s), so each poll pinned the very RDDs it waited on
+    across the next ``System.gc()``. The registry holds its RDDs weakly
+    and its key iterator skips entries whose RDD was already collected,
+    so this count pins nothing."""
+    registry = spark.sparkContext._jsc.sc().persistentRdds().underlying()
+    return len(registry.keySet().toArray())
 
 
 def _poll_reclaimed(
@@ -52,7 +62,10 @@ def _poll_reclaimed(
         if _n_persistent(spark) <= before or gc_rounds >= min_gc_rounds:
             break
         gc.collect()  # drop py4j wrappers holding JVM references
-        canary = jvm.java.lang.ref.WeakReference(jvm.java.lang.Object())
+        # the referent is a JVM String decoded from a Python str, so no
+        # py4j binding holds it (a py4j-returned Object stays bound until
+        # the finalizer thread releases it, after this System.gc())
+        canary = jvm.java.lang.ref.WeakReference(f"canary-{time.time_ns()}")
         jvm.System.gc()
         jvm.System.runFinalization()
         time.sleep(0.3)
