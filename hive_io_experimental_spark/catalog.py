@@ -329,6 +329,7 @@ class Catalog:
             )
             if name in taken:
                 raise ValueError(f"column already exists: {name}")
+            entry.pop("stamp", None)  # a schema change voids the vouch
             entry["schema"] = HiveTableSchema(
                 schema.data_fields + ((name, data_type),),
                 schema.partition_keys,
@@ -365,6 +366,7 @@ class Catalog:
                 raise ValueError(f"no such data column: {name}")
             if not remaining:
                 raise ValueError("cannot drop the last data column")
+            entry.pop("stamp", None)  # a schema change voids the vouch
             entry["schema"] = HiveTableSchema(
                 remaining, schema.partition_keys
             ).to_json()
@@ -407,6 +409,7 @@ class Catalog:
         with self._exclusive():
             doc = self._load()
             entry = self._entry_or_raise(doc, desc)
+            entry.pop("stamp", None)  # new data voids the vouch
             for p in entry["partitions"]:
                 if p["values"] == values:
                     if stats is not None:
@@ -473,6 +476,7 @@ class Catalog:
             doc = self._load()
             entry = self._entry_or_raise(doc, desc)
             before = len(entry["partitions"])
+            entry.pop("stamp", None)  # dropped data voids the vouch
             entry["partitions"] = [
                 p for p in entry["partitions"] if p["values"] != values
             ]
@@ -568,6 +572,50 @@ class Catalog:
             entry["partitions"] = partitions
             self._save(doc)
         return version
+
+    # -- artifact stamps ------------------------------------------------------
+    #
+    # A stamped artifact set (operators/artifacts.py) carries one build_id
+    # in every row of every table. The catalog vouches for that stamp so a
+    # reader can fence the set from metadata, the way the reference takes
+    # table metadata from the metastore and never from the data. The vouch
+    # holds for one data state only: the current_version of a versioned
+    # table, or the entry itself of an unversioned one (which a rewrite
+    # must drop and recreate). Any other commit, or a recreate, leaves the
+    # table unvouched, and readers fall back to probing the data.
+
+    def set_stamp(
+        self, desc: TableDesc | str, build_id: str, nonempty: bool,
+        version: int | None = None,
+    ) -> bool:
+        """Vouch that ``desc``'s current data is build ``build_id`` and
+        whether it holds any row. ``version`` pins the snapshot the
+        caller committed: if another commit has landed since, nothing is
+        recorded (the table stays unvouched) and False is returned. One
+        record per table entry, replaced on every call."""
+        desc = TableDesc.parse(desc) if isinstance(desc, str) else desc
+        with self._exclusive():
+            doc = self._load()
+            entry = self._entry_or_raise(doc, desc)
+            current = entry.get("current_version")
+            if version is not None and version != current:
+                return False
+            entry["stamp"] = {
+                "build_id": build_id, "nonempty": bool(nonempty),
+                "version": current,
+            }
+            self._save(doc)
+        return True
+
+    def stamp(self, desc: TableDesc | str) -> tuple | None:
+        """(build_id, nonempty, version) while the state set_stamp
+        vouched for is still current, else None. ``version`` is the
+        vouched snapshot (None for an unversioned table)."""
+        entry = self.get_table(desc)
+        got = entry.get("stamp")
+        if got is None or got["version"] != entry.get("current_version"):
+            return None
+        return got["build_id"], got["nonempty"], got["version"]
 
     def snapshot_manifest(
         self, desc: TableDesc | str, version: int | None = None

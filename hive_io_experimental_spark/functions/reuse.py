@@ -72,14 +72,29 @@ def run_concurrently(*thunks):
     them sequentially). Submitting the thunks from a small thread pool
     lets each job's task tail back-fill cores freed by its siblings.
 
+    Each thunk runs with the caller's Spark local properties (job group,
+    job description, scheduler pool), copied when it is submitted — the
+    ``pyspark.inheritable_thread_target`` contract — so every job it
+    starts is attributed to the caller's group.
+
     Only for thunks with NO data dependency on each other. Exceptions
     propagate from the first (call-order) failing thunk, so fail-loud
-    fences keep their original error type and message. With one thunk
-    this degrades to a plain call — no thread is spawned."""
-    if len(thunks) == 1:
-        return (thunks[0](),)
+    fences keep their original error type and message. With fewer than
+    two thunks this degrades to plain calls — no thread is spawned."""
+    if len(thunks) < 2:
+        return tuple(t() for t in thunks)
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext, inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    if SparkContext._active_spark_context is not None:
+        # one copy per thunk: a thread that changes a property must not
+        # change its siblings'; the session form also carries job tags
+        session = SparkSession.active()
+        thunks = tuple(
+            inheritable_thread_target(session)(t) for t in thunks
+        )
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         # collect in call order; a failing earlier thunk raises first

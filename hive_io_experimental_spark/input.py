@@ -302,11 +302,17 @@ class HiveInput:
                     return df, schema.partition_keys
                 if schema.partition_keys:
                     reader = reader.option("basePath", location)
-                df = (
-                    reader.schema(schema.to_struct_type())
-                    .format(fmt)
-                    .load([p.location for p in manifest])
-                )
+                reader = reader.schema(schema.to_struct_type()).format(fmt)
+                # Spark lists more root paths than the discovery
+                # threshold with a Spark job while it builds the plan;
+                # chunks at the threshold, unioned, list on the driver
+                step = max(1, int(self.spark.conf.get(
+                    "spark.sql.sources.parallelPartitionDiscovery.threshold"
+                )))
+                locs = [p.location for p in manifest]
+                df = reader.load(locs[:step])
+                for i in range(step, len(locs), step):
+                    df = df.union(reader.load(locs[i:i + step]))
                 return df, schema.partition_keys
             if as_of_version is not None:
                 raise SnapshotError(

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_io_experimental_spark.functions.hashing import resolve_family
-from hive_io_experimental_spark.functions.reuse import reuse
+from hive_io_experimental_spark.functions.reuse import reuse, run_concurrently
 from hive_io_experimental_spark.operators.dedup import (
     _content_fps,
     _validate_bloom_geometry,
@@ -223,11 +223,7 @@ def build_corpus_artifacts(
             )
 
         writers.append(_write_winnow)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
-        for fut in [pool.submit(w) for w in writers]:
-            fut.result()  # propagate the first failure BEFORE the manifest
+    run_concurrently(*writers)
     manifest = {
         "version": ARTIFACT_VERSION,
         "seq": 0,

@@ -33,6 +33,7 @@ from hive_io_experimental_spark.operators.artifacts import (
     ArtifactSet,
     Part,
     append_fresh,
+    append_stamped,
     mismatch_count,
     read_set,
     write_set,
@@ -2401,8 +2402,9 @@ _CODEBOOK_COLS = (
     ("cv", T.ArrayType(T.DoubleType())),
 )
 # the persisted index sets (operators/artifacts.py): geometry tables are
-# KB-sized and collected once per read; corpus-sized tables are versioned
-# (appends land as snapshots) and get one sampled stamp per read
+# KB-sized and memoized per build; corpus-sized tables are versioned
+# (appends land as snapshots). The catalog vouches for a healthy set, and
+# any other state is probed (one collect or sampled stamp per table)
 _LSH_INDEX = ArtifactSet("index", "lsh_build_index", (
     Part("meta", "_meta", "meta"),
     Part("buckets", "", "stamp", versioned=True),
@@ -2499,8 +2501,6 @@ def pq_append_to_index(
     corpus as data, so corpus growth costs nothing there (quantizer
     DRIFT is a quality question, monitored by embedding_centroid_drift,
     answered by an explicit rebuild)."""
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-
     op = "pq_append_to_index"
     bid, p = read_set(spark, catalog, _PQ_INDEX, index_table, op)
     m, dsub = _check_stored_codebooks(op, index_table, p["codebooks"])
@@ -2513,9 +2513,7 @@ def pq_append_to_index(
     fresh, n = append_fresh(new_codes, p["codes"], bid)
     if n == 0:
         return catalog.current_version(index_table)
-    return HiveOutput(spark, catalog).append_table(
-        WriteSpec(table=index_table), fresh, note=op
-    )
+    return append_stamped(spark, catalog, index_table, fresh, bid, op)
 
 
 def _pq_served(spark, catalog, index_table: str, op: str,
@@ -2795,11 +2793,15 @@ def ivf_pq_query_index(
     unique.
 
     Serving preconditions (raise, never silently-wrong scores): the four
-    tables' ``build_id`` stamps must agree (a torn rebuild is refused —
-    two geometry collects and two limit-1 probes, no full scans), and
-    ``num_subspaces`` must match the stored codebooks' subspace count (a
-    mismatch would index past the stored codes/LUT arrays and, with ANSI
-    off, surface as silent NULL scores)."""
+    tables' ``build_id`` stamps must agree (a torn rebuild is refused),
+    and ``num_subspaces`` must match the stored codebooks' subspace
+    count (a mismatch would index past the stored codes/LUT arrays and,
+    with ANSI off, surface as silent NULL scores). The catalog vouches
+    for the stamps of a healthy index, so the fence runs no Spark job
+    and the geometry comes from the build memo: the query collect is
+    the one job before the scoring plan. Any other state falls back to
+    probing the data (two geometry collects and two limit-1 probes, no
+    full scans) — see operators/artifacts.py read_set."""
     op = "ivf_pq_query_index"
     # the bounded query collect (the small-query guard) overlaps the
     # fence probes and stays first in call order, so its error wins
@@ -3085,8 +3087,6 @@ def ivf_pq_append_to_index(
     collect and takes the distributed path (spread Arrow pass, one
     checkpointed anti-join per table). Both commit the same rows.
     """
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-
     op = "ivf_pq_append_to_index"
 
     def vectors(df: DataFrame) -> DataFrame:
@@ -3135,15 +3135,12 @@ def ivf_pq_append_to_index(
     (fresh_lists, n_lists), (fresh_codes, n_codes) = halves
     # the APPENDS stay strictly ordered (lists first, codes second — the
     # documented torn-append direction)
-    out = HiveOutput(spark, catalog)
     if n_lists > 0:
-        out.append_table(
-            WriteSpec(table=f"{index_table}_lists"), fresh_lists, note=op
-        )
+        append_stamped(spark, catalog, f"{index_table}_lists", fresh_lists,
+                       bid, op)
     if n_codes == 0:
         return catalog.current_version(index_table)
-    return out.append_table(WriteSpec(table=index_table), fresh_codes,
-                            note=op)
+    return append_stamped(spark, catalog, index_table, fresh_codes, bid, op)
 
 
 def _ivf_pq_fresh_local(
@@ -3259,11 +3256,8 @@ def ivf_pq_index_repair(
     Scale: two id-projection anti-joins (one long per indexed vector)
     plus |torn| × (nlist + ksub) repair dots — nightly-maintenance
     shaped, no corpus rescan beyond one semi-join on the torn ids."""
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-
-    bid, p = read_set(
-        spark, catalog, _IVF_PQ_INDEX, index_table, "ivf_pq_index_repair"
-    )
+    op = "ivf_pq_index_repair"
+    bid, p = read_set(spark, catalog, _IVF_PQ_INDEX, index_table, op)
     list_ids = p["lists"].select("id")
     code_ids = p["codes"].select("id")
 
@@ -3292,9 +3286,8 @@ def ivf_pq_index_repair(
     if corpus is None or (n_need_codes == 0 and n_need_lists == 0):
         return _report(0, 0)
     num_subspaces, dsub = _check_stored_codebooks(
-        "ivf_pq_index_repair", index_table, p["codebooks"]
+        op, index_table, p["codebooks"]
     )
-    out = HiveOutput(spark, catalog)
     src = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_vec")
     )
@@ -3375,10 +3368,7 @@ def ivf_pq_index_repair(
                 f"{n_need_codes} missing-codes rows — the encoder "
                 f"dropped rows the corpus fence passed"
             )
-        out.append_table(
-            WriteSpec(table=index_table), fresh_codes,
-            note="ivf_pq_index_repair",
-        )
+        append_stamped(spark, catalog, index_table, fresh_codes, bid, op)
     if n_need_lists > 0:
         vecs = _vectors_for(need_lists, n_need_lists, "lists")
         fresh_lists = (
@@ -3394,10 +3384,8 @@ def ivf_pq_index_repair(
                 f"{n_need_lists} missing-lists rows — the assigner "
                 f"dropped rows the corpus fence passed"
             )
-        out.append_table(
-            WriteSpec(table=f"{index_table}_lists"), fresh_lists,
-            note="ivf_pq_index_repair",
-        )
+        append_stamped(spark, catalog, f"{index_table}_lists", fresh_lists,
+                       bid, op)
     return _report(repaired_codes, repaired_lists)
 
 
@@ -3707,8 +3695,6 @@ def lsh_append_to_index(
     time-travel reads serve the index as-of any tick. Appending onto
     mixed stamps is refused. Returns the committed snapshot version (or
     the current one on a no-op)."""
-    from hive_io_experimental_spark.output import HiveOutput, WriteSpec
-
     op = "lsh_append_to_index"
     bid, p = read_set(spark, catalog, _LSH_INDEX, index_table, op)
     meta = p["meta"]
@@ -3723,9 +3709,7 @@ def lsh_append_to_index(
     fresh, n = append_fresh(qb, p["buckets"], bid)
     if n == 0:
         return catalog.current_version(index_table)
-    return HiveOutput(spark, catalog).append_table(
-        WriteSpec(table=index_table), fresh, note=op
-    )
+    return append_stamped(spark, catalog, index_table, fresh, bid, op)
 
 
 def _lsh_rank(meta, buckets: DataFrame, corpus: DataFrame,

@@ -244,7 +244,8 @@ def serve_pq_topk_stream(
 
     Per micro-batch cost: |batch| x m x ksub LUT dots (map-side), one
     broadcast of the batch LUTs over the pinned codes scan, a
-    batch-local rank, plus four fence jobs (two tables x pre/post)."""
+    batch-local rank, plus the pre/post fences: no job while the
+    catalog vouches for the set, four probe jobs otherwise."""
     op = "serve_pq_topk_stream"
     bid, codes, codebooks, dsub = _pq_served(
         spark, catalog, index_table, op, num_subspaces
@@ -294,7 +295,8 @@ def serve_ivf_pq_topk_stream(
 
     Lifecycle semantics are serve_pq_topk_stream's, over four tables:
     plan-time torn-rebuild refusal, per-batch pre+post fences pinned to
-    the planned build (eight fence jobs per batch), snapshot isolation
+    the planned build (job-free while the catalog vouches for the set,
+    eight probe jobs per batch otherwise), snapshot isolation
     across the two-table ivf_pq_append_to_index (appended rows carry
     the planned build_id; the pinned lists/codes manifests never see a
     half-landed append — serve-through on the planned snapshot, restart
